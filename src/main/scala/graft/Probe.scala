@@ -526,36 +526,6 @@ object Probe {
           forceSum(SparkEntry.queries("q_kcore")(spark, dir), "node", "deg")
         }
 
-      case "r15_ab" =>
-        // one-window A/B driver for the r15 optimization set: staged
-        // builds (min-of-2, per-build cache clears) + the touched
-        // queries (3 runs each; min of runs 2-3 is the warm basis)
-        import graft.operators.{Dedup, GraphIndex, Pipeline}
-        def minOf2(label: String)(pre: => Unit)(f: => Any): Unit = {
-          var best = Double.MaxValue
-          for (_ <- 1 to 2) {
-            pre
-            val t0 = System.nanoTime(); f
-            best = math.min(best, (System.nanoTime() - t0) / 1e9)
-          }
-          println(f"$label: $best%.2f s")
-        }
-        minOf2("graph_build")(GraphIndex.clearGraphCache())(
-          GraphIndex.stagedGraph(spark, dir))
-        minOf2("web_state_build")(Pipeline.clearWebStateCache())(
-          Pipeline.stagedWebState(spark, dir))
-        minOf2("band_index_build")(Dedup.clearBandIndexCache())(
-          Dedup.stagedBandIndex(spark, dir))
-        for (name <- Seq("dbscan", "profile", "quantiles", "node2vec",
-            "pipeline_web_append", "dedup_cc", "entity_resolve")) {
-          for (i <- 1 to 3) {
-            val t0 = System.nanoTime()
-            SparkEntry.queries(s"q_$name")(spark, dir)
-              .write.format("noop").mode("overwrite").save()
-            println(f"$name run$i: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-          }
-        }
-
       case "web_append_parts" =>
         // phase split of curateWebAppend: where does the inc row go?
         import org.apache.spark.sql.functions._

@@ -276,10 +276,11 @@ case class LshSignatures(child: Expression, planesFlat: Array[Double],
   * exactly `array_sort`'s lexicographic struct order. Ranking sorts
   * (d2 << 12 | cid) packed longs — order-preserving because
   * nCents ≤ 4096 = 2^12 and micro-unit d2 (≲ 7e13 for 64-dim ±2e6
-  * inputs) stays far under 2^51; a d2 beyond the packable bound falls
-  * back to an equivalent comparator sort, so the order contract holds
-  * for ANY input. NULL child → NULL; length ≠ dims → NULL (the
-  * VectorFold ragged convention). */
+  * inputs) stays far under 2^51; a d2 outside [0, packable bound]
+  * falls back to an equivalent comparator sort, so the order contract
+  * holds for ANY input. Distance and order live in the companion
+  * object, shared with the model fit. NULL child → NULL; length ≠ dims
+  * → NULL (the VectorFold ragged convention). */
 case class NearestLists(child: Expression, centsFlat: Array[Long],
     dims: Int, nCents: Int, nProbe: Int)
     extends UnaryExpression with CodegenFallback {
@@ -309,19 +310,11 @@ case class NearestLists(child: Expression, centsFlat: Array[Long],
     if (e.numElements() != dims) null
     else {
       val d2s = new Array[Long](nCents)
+      NearestLists.sqDists(e.toLongArray(), 0, centsFlat, dims, nCents, d2s)
       var packable = true
       var c = 0
       while (c < nCents) {
-        var s = 0L
-        var j = 0
-        val base = c * dims
-        while (j < dims) {
-          val d = e.getLong(j) - centsFlat(base + j)
-          s += d * d
-          j += 1
-        }
-        if (s > PackBound) packable = false
-        d2s(c) = s
+        if (d2s(c) < 0 || d2s(c) > PackBound) packable = false
         c += 1
       }
       val out = new Array[Any](m)
@@ -338,9 +331,9 @@ case class NearestLists(child: Expression, centsFlat: Array[Long],
         }
       } else {
         // rare path (inputs beyond micro-unit range): same (d2, cid)
-        // order via an index comparator — d2 ≥ 0, no overflow tricks
+        // order via an index comparator — no overflow tricks
         val idx = Array.range(0, nCents).sortWith { (x, y) =>
-          d2s(x) < d2s(y) || (d2s(x) == d2s(y) && x < y)
+          NearestLists.precedes(d2s(x), x, d2s(y), y)
         }
         var i = 0
         while (i < m) {
@@ -354,6 +347,46 @@ case class NearestLists(child: Expression, centsFlat: Array[Long],
 
   override protected def withNewChildInternal(c: Expression): NearestLists =
     copy(child = c)
+}
+
+/** The distance and order of [[NearestLists]], shared with the
+  * partition-local Lloyd fit (`Clustering.fitFixedSlices`) so that the
+  * assignment a model is fitted under and the one it is served under
+  * cannot drift apart. */
+object NearestLists {
+  /** out(c) = Σⱼ (e(off + j) − cents(c·dims + j))² for every centroid
+    * c < nCents: the exact BIGINT distance of [[SqDistI64]]. */
+  def sqDists(e: Array[Long], off: Int, cents: Array[Long], dims: Int,
+              nCents: Int, out: Array[Long]): Unit = {
+    var c = 0
+    while (c < nCents) {
+      var s = 0L
+      var j = 0
+      val base = c * dims
+      while (j < dims) {
+        val d = e(off + j) - cents(base + j)
+        s += d * d
+        j += 1
+      }
+      out(c) = s
+      c += 1
+    }
+  }
+
+  /** The (d2 asc, cid asc) order: does centroid a rank before b? */
+  def precedes(d2a: Long, a: Int, d2b: Long, b: Int): Boolean =
+    d2a < d2b || (d2a == d2b && a < b)
+
+  /** The first centroid of that order: ties go to the lower cid. */
+  def nearest(d2s: Array[Long], nCents: Int): Int = {
+    var best = 0
+    var c = 1
+    while (c < nCents) {
+      if (precedes(d2s(c), c, d2s(best), best)) best = c
+      c += 1
+    }
+    best
+  }
 }
 
 /** All PQ subspace codes of one micro-unit vector in ONE compiled

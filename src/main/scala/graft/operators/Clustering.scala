@@ -3,28 +3,32 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel
+import graft.functions.NearestLists
 import graft.sources.Tables
 
 /** K-Means clustering over `embeddings` (SURVEY §2 B21) — the proper
-  * completion of the reference's unfinished sketch
-  * (`/root/reference/kmeans.go:5-25`, "each Map runs K-Means locally,
-  * reducers merge coordinate ranges", unimplemented per `README.md:12`).
+  * completion of the reference's unfinished sketch (`kmeans.go:5-25`,
+  * "each Map runs K-Means locally, reducers merge coordinate ranges",
+  * unimplemented per `README.md:12`).
   *
-  * Spark-first Lloyd's algorithm:
-  *  - assignment: centroids are a tiny driver-side array broadcast as a
-  *    literal into one per-row expression (array_min over (dist², cid)
-  *    structs) — no join, no shuffle, whole corpus scanned once per
-  *    iteration;
-  *  - update: posexplode to (cid, dim, value) then partial/final avg —
-  *    one narrow shuffle of k·64 running sums per partition, NOT the
-  *    vectors themselves (map-side combine does the heavy lifting);
-  *  - the k·64-double centroid state lives on the driver between
-  *    iterations — constant-size regardless of corpus scale.
+  * The declared, oracle-exact loop ([[fitFixed]]) is that sketch:
+  *  - map: every partition assigns its vectors to their nearest
+  *    centroid and folds exact BIGINT per-(cid, dim) sums and counts
+  *    into one k·dims array — the vectors never leave their partition;
+  *  - reduce: the partial arrays merge with `reduce`, one Spark job per
+  *    Lloyd round and no per-round query plan;
+  *  - the k·dims centroid state lives on the driver between rounds —
+  *    constant-size regardless of corpus scale.
+  * The double-precision [[fit]] keeps the declarative round (a
+  * broadcast-literal assignment expression, then posexplode to
+  * (cid, dim) and a partial/final avg).
   *
   * Determinism: init = the k lowest vec_ids; ties in assignment break to
-  * the lower cid (struct ordering); centroid components are rounded to
-  * 9 decimals each iteration so double-summation order cannot leak into
-  * the result across runs/partitionings.
+  * the lower cid; an empty cluster keeps its previous centroid. The
+  * double loop rounds components to 9 decimals each iteration so
+  * double-summation order cannot leak into the result; the fixed-point
+  * loop needs no such rounding (integer sums are order-independent).
   */
 object Clustering {
 
@@ -139,12 +143,6 @@ object Clustering {
         transform(col("embedding").cast("array<double>"),
           x => round(x * lit(FpScale)).cast(LongType)).as("e"))
 
-  private[operators] def distStructsL(cs: Array[Array[Long]]): Seq[org.apache.spark.sql.Column] =
-    cs.zipWithIndex.map { case (c, i) =>
-      struct(graft.functions.VectorExprs.sqDistLong(col("e"), lit(c)).as("d2"),
-        lit(i).as("cid"))
-    }.toSeq
-
   private[operators] def assignFixed(v: DataFrame, cs: Array[Array[Long]]): DataFrame =
     v.withColumn("best",
         element_at(graft.functions.VectorExprs.nearestLists(col("e"), cs, 1), 1))
@@ -169,25 +167,106 @@ object Clustering {
 
   /** df form: expects (vec_id: Long, e: Array[Long] micro-units); not
     * memoized. Also the IVF coarse-quantizer fit (`Similarity`), where
-    * exactness makes the whole ANN search DuckDB-replayable. */
-  def fitFixed(vectors: DataFrame, iters: Int, k: Int): Array[Array[Long]] = {
-    val v = vectors.cache()
-    var cs: Array[Array[Long]] = v.orderBy("vec_id").limit(k)
-      .collect().map(_.getSeq[Long](1).toArray)
-    for (_ <- 1 to iters) {
-      val upd = assignFixed(v, cs)
-        .select(col("cid"), posexplode(col("e")))
-        .groupBy("cid", "pos")
-        .agg(sum("col").as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = cs.clone().map(_.clone())
-      upd.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) = roundDiv(r.getLong(2), r.getLong(3))
+    * exactness makes the whole ANN search DuckDB-replayable. The
+    * one-slice case of [[fitFixedSlices]]. */
+  def fitFixed(vectors: DataFrame, iters: Int, k: Int): Array[Array[Long]] =
+    fitFixedSlices(vectors, 1, iters, k)(0)
+
+  /** Independent fixed-point Lloyd's fits of every one of `slices` equal
+    * contiguous column slices of `e` (slice s = components
+    * [s·w, (s+1)·w), w = dims / slices) — the PQ codebooks in one pass
+    * over the corpus. Returns [slice][cid][dim]; each slice's model is
+    * exactly what [[fitFixed]] returns on that slice alone.
+    *
+    * The input is persisted once as (vec_id, long[]) and every round is
+    * ONE Spark job: each partition assigns every vector in every slice
+    * by the [[graft.functions.NearestLists]] distance and tie order and
+    * folds exact sums and counts into [slice][cid][dim] arrays; the
+    * partials merge with `reduce`, and the driver takes the
+    * round-half-away-from-zero mean. Integer sums are order-independent,
+    * so the result does not depend on the partitioning. Jobs: 1 (init +
+    * validation) + `iters`.
+    *
+    * Degenerate input: an empty input gives an empty model per slice
+    * (k > n gives n centroids); a null vector outside the init is
+    * skipped; a null init vector or any vector whose length differs from
+    * the lowest vec_id's is an IllegalArgumentException naming the
+    * vec_id. */
+  def fitFixedSlices(vectors: DataFrame, slices: Int, iters: Int,
+                     k: Int): Array[Array[Array[Long]]] = {
+    require(slices >= 1, s"need >= 1 slice, got $slices")
+    require(k >= 1, s"need >= 1 centroid, got $k")
+    val rows = vectors
+      .select(col("vec_id").cast(LongType), col("e").cast("array<bigint>"))
+      .queryExecution.toRdd
+      .map(r => (r.getLong(0),
+        if (r.isNullAt(1)) null else r.getArray(1).toLongArray()))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // job 1: each partition's k lowest vec_ids and, per vector
+      // length, its lowest vec_id (every length but the init's is an
+      // error — reported for the lowest offending vec_id)
+      val parts = rows.mapPartitions { it =>
+        val part = it.toArray
+        val lens = part.filter(_._2 != null).groupBy(_._2.length)
+          .map { case (len, xs) => (len, xs.map(_._1).min) }
+        Iterator((part.sortBy(_._1).take(k), lens.toArray))
+      }.collect()
+      val init = parts.flatMap(_._1).sortBy(_._1).take(k)
+      if (init.isEmpty) Array.fill(slices)(Array.empty[Array[Long]])
+      else {
+        init.find(_._2 == null).foreach { case (id, _) =>
+          throw new IllegalArgumentException(
+            s"k-means init vector of vec_id $id is null") }
+        val dims = init.head._2.length
+        parts.flatMap(_._2).filter(_._1 != dims).sortBy(_._2).headOption
+          .foreach { case (len, id) =>
+            throw new IllegalArgumentException(
+              s"vector of vec_id $id has length $len, expected $dims") }
+        require(dims % slices == 0,
+          s"vector length $dims does not split into $slices slices")
+        val w = dims / slices
+        val kk = init.length
+        // cs(s) = slice s's centroids, flat row-major (cid · w + j)
+        var cs = Array.tabulate(slices)(s => init.flatMap(_._2.slice(s * w, s * w + w)))
+        for (_ <- 1 to iters) {
+          val cur = cs
+          val (sums, counts) = rows.mapPartitions { it =>
+            val sums = new Array[Long](slices * kk * w)
+            val counts = new Array[Long](slices * kk)
+            val d2s = new Array[Long](kk)
+            it.foreach { case (_, e) =>
+              if (e != null) {
+                var s = 0
+                while (s < slices) {
+                  val off = s * w
+                  NearestLists.sqDists(e, off, cur(s), w, kk, d2s)
+                  val sc = s * kk + NearestLists.nearest(d2s, kk)
+                  counts(sc) += 1
+                  var j = 0
+                  while (j < w) { sums(sc * w + j) += e(off + j); j += 1 }
+                  s += 1
+                }
+              }
+            }
+            Iterator((sums, counts))
+          }.reduce { (a, b) =>
+            var i = 0
+            while (i < a._1.length) { a._1(i) += b._1(i); i += 1 }
+            i = 0
+            while (i < a._2.length) { a._2(i) += b._2(i); i += 1 }
+            a
+          }
+          cs = Array.tabulate(slices) { s =>
+            val next = cur(s).clone()
+            for (c <- 0 until kk; n = counts(s * kk + c) if n > 0; j <- 0 until w)
+              next(c * w + j) = roundDiv(sums((s * kk + c) * w + j), n)
+            next
+          }
+        }
+        cs.map(flat => Array.tabulate(kk)(c => flat.slice(c * w, c * w + w)))
       }
-      cs = next
-    }
-    v.unpersist()
-    cs
+    } finally rows.unpersist(blocking = false)
   }
 
   /** B21 q_kmeans: cluster cardinalities + within-cluster inertia after
@@ -264,8 +343,8 @@ object Clustering {
   // class (matvec as aggregation) beside the Lloyd loop. v_{t+1} ∝
   // Xᵀ(X·v_t): one pass computes every s_i = ⟨x_i, v⟩ (64 codegen'd
   // multiply-adds, whole-stage), the transpose pass sums x_id·s_i per
-  // dimension (posexplode + partial/final sum — the kmeans update
-  // shape), and the driver renormalizes 64 longs. Renormalization is
+  // dimension (posexplode + partial/final sum — the double k-means
+  // update shape), and the driver renormalizes 64 longs. Renormalization is
   // MAX-norm, not L2: power iteration converges under any positive
   // rescaling, and max-norm needs no sqrt — every step stays exact
   // integer, so the DuckDB oracle unrolls the loop as chained CTEs and

@@ -382,22 +382,41 @@ object Relational {
     // 16 heaviest: protection targets the dominant values, and the
     // per-row key work stays a couple of binary searches.
     val mult = raw.groupBy(identity).view.mapValues(_.size).toMap
-    val heavies = raw.distinct.filter(v => mult(v) >= 2)
+    val heaviest = raw.distinct.filter(v => mult(v) >= 2)
       .sortBy(v => -mult(v)).take(16)
-      .sortBy(v => if (isDouble) v.asInstanceOf[Double]
-        else v.asInstanceOf[Long].toDouble)
-    val idBounds: Map[Any, Seq[Long]] =
-      if (heavies.isEmpty) Map.empty
+    // approx_percentile sketches in doubles, so past 2^53 a BIGINT
+    // candidate is its double rounding, not necessarily a value of x:
+    // each candidate resolves to the most frequent exact x in its
+    // double bucket, plus any other x there holding >= 2/slices of the
+    // rows (below 2^53 the bucket is the value itself). The keys
+    // binary-search the heavies, so they sort in x's own order.
+    val (heavies, idBounds): (Seq[Any], Map[Any, Seq[Long]]) =
+      if (heaviest.isEmpty) (Nil, Map.empty)
       else {
-        val tmax = heavies.map(mult).max
+        val tmax = heaviest.map(mult).max
         val sf = (1 to tmax).map(i => i.toDouble / (tmax + 1))
-        rows.where(col("x").isin(heavies: _*))
+        val bucket = if (isDouble) col("x") else col("x").cast("double")
+        val cands = heaviest.map {
+          case l: Long => l.toDouble
+          case d => d
+        }
+        val picked = rows.where(bucket.isin(cands: _*))
           .groupBy("x")
-          .agg(expr(
+          .agg(count(lit(1)).as("c"), expr(
             s"approx_percentile(id, array(${sf.mkString(", ")}), 200)").as("ib"))
-          // distinct per heavy: binary search needs duplicate-free
-          // sorted bounds (duplicates only merge adjacent buckets)
-          .collect().map(r => r.get(0) -> r.getSeq[Long](1).distinct).toMap
+          .collect()
+          .groupBy(r => if (isDouble) r.get(0) else r.getLong(0).toDouble)
+          .values.flatMap { b =>
+            val byMass = b.sortBy(r => (-r.getLong(1), if (isDouble) 0L else r.getLong(0)))
+            byMass.head +: byMass.tail.filter(_.getLong(1) * slices >= 2 * n)
+          }
+          .toSeq.sortBy(-_.getLong(1)).take(16)
+        val hs: Seq[Any] =
+          if (isDouble) picked.map(_.getDouble(0)).sorted
+          else picked.map(_.getLong(0)).sorted
+        // distinct per heavy: binary search needs duplicate-free
+        // sorted bounds (duplicates only merge adjacent buckets)
+        (hs, picked.map(r => r.get(0) -> r.getSeq[Long](2).distinct).toMap)
       }
     // slc: r15's exact linear value-range slice (cheap codegen'd
     // arithmetic — the common no-skew path is byte-identical to the

@@ -887,23 +887,12 @@ object Similarity {
     pqCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")),
       fitSubspaceBooks(vecsQ(spark, dir).select(col("vec_id"), col("eq")), "eq"))
 
-  /** Fit the [[PqM]] subspace codebooks CONCURRENTLY — each fit is an
-    * independent driver-round Lloyd loop over a narrow projection, and
-    * at small per-job cost the wall clock is dominated by job-round
-    * overhead, so 8 interleaved job streams ≈ one fit's latency.
-    * Results are independent of interleaving (each fit only reads its
-    * own projection). */
-  private def fitSubspaceBooks(v: DataFrame, src: String): Array[Array[Array[Long]]] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.sequence((0 until PqM).toList.map { s =>
-        Future(Clustering.fitFixed(
-          v.select(col("vec_id"), slice(col(src), s * PqD + 1, PqD).as("e")),
-          PqIters, PqK))
-      }), Duration.Inf).toArray
-  }
+  /** Fit the [[PqM]] subspace codebooks in ONE multi-slice Lloyd loop
+    * ([[Clustering.fitFixedSlices]]): every round is one job over the
+    * corpus, each vector assigned in all PqM subspaces at once. */
+  private def fitSubspaceBooks(v: DataFrame, src: String): Array[Array[Array[Long]]] =
+    Clustering.fitFixedSlices(v.select(col("vec_id"), col(src).as("e")),
+      PqM, PqIters, PqK)
 
   /** q_simsearch_pq: PQ + asymmetric-distance shortlist + exact
     * re-rank. Corpus vectors are encoded once into M codes; a query
@@ -1050,11 +1039,10 @@ object Similarity {
   private[graft] def ivfpqModel(spark: SparkSession, dir: String): (Array[Array[Long]], Array[Array[Array[Long]]]) =
     ivfpqCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")), {
       val cents = ivfCentsFixed(spark, dir, ivfK(corpusSize(spark, dir)))
-      // localCheckpoint: the residual projection feeds 8 concurrent
-      // codebook fits; without it each fit would re-run the assignment
-      // (K distance kernels over the corpus) behind its narrow slice
+      // the codebook fit persists its input, so the coarse assignment
+      // behind the residuals runs once per build
       val resid = residuals(vecsQ(spark, dir), centsDf(spark, cents), cents)
-        .select(col("vec_id"), col("rq")).localCheckpoint()
+        .select(col("vec_id"), col("rq"))
       (cents, fitSubspaceBooks(resid, "rq"))
     })
 
@@ -1206,7 +1194,7 @@ object Similarity {
         Clustering.Iters, ivfK(n))
       val cdf = centsDf(spark, cents)
       // keep cid beside the residual: the SAME checkpointed table feeds
-      // the 8 codebook fits AND the base encode — the coarse assignment
+      // the codebook fit AND the base encode — the coarse assignment
       // (K distance kernels over ~90% of the corpus) runs once, not
       // twice per build
       val resid = residuals(fitSrc, cdf, cents)

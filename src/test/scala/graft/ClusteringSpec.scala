@@ -326,4 +326,139 @@ class ClusteringSpec extends SparkSuiteBase {
       assert(coreIds(cl), s"cluster label $cl of $id is not a core point")
     }
   }
+
+  // ── fixed-point fit: reference parity, job count, degenerate input ──
+
+  /** (vec_id, e) rows with possibly-null vectors, as the fit expects. */
+  private def vecFrame(rows: Seq[(Long, Array[Long])]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("vec_id", LongType, nullable = false),
+      StructField("e", ArrayType(LongType, containsNull = false), nullable = true)))
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (id, e) => Row(id, e) }: _*), schema)
+  }
+
+  /** Plain-Scala Lloyd's: init = the k lowest vec_ids, nearest centroid
+    * by (d2, cid), exact integer mean rounded half away from zero, an
+    * empty cluster keeps its centroid, null vectors are skipped. */
+  private def refLloyd(rows: Seq[(Long, Array[Long])], iters: Int,
+                       k: Int): Array[Array[Long]] = {
+    def d2(a: Array[Long], b: Array[Long]): Long =
+      a.indices.map(j => (a(j) - b(j)) * (a(j) - b(j))).sum
+    val live = rows.filter(_._2 != null).map(_._2)
+    var cs = rows.sortBy(_._1).take(k).map(_._2.clone()).toArray
+    for (_ <- 1 to iters) {
+      val cur = cs
+      val members = live.groupBy(e => cur.indices.minBy(c => (d2(e, cur(c)), c)))
+      cs = cur.indices.map { c =>
+        members.get(c).fold(cur(c)) { m =>
+          Array.tabulate(cur(c).length) { j =>
+            (BigDecimal(m.map(_(j)).sum) / BigDecimal(m.size))
+              .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+          }
+        }
+      }.toArray
+    }
+    cs
+  }
+
+  test("fitFixed equals a plain-Scala Lloyd reference; multi-slice equals per-slice fits") {
+    val rnd = new scala.util.Random(1207)
+    def unit(range: Int): Long = (rnd.nextInt(2 * range + 1) - range).toLong
+    val cases: Seq[(String, Seq[(Long, Array[Long])], Int)] =
+      (1 to 4).map { t =>
+        // wide micro-unit range with negative components (residual-like)
+        val n = 30 + rnd.nextInt(40)
+        (s"random wide $t",
+          rnd.shuffle((0 until n).toList).map(i => i.toLong * 3 -> Array.fill(8)(unit(2000000))),
+          2 + rnd.nextInt(7))
+      } ++ (1 to 4).map { t =>
+        // tiny range: equidistant ties on every round
+        val n = 20 + rnd.nextInt(30)
+        (s"random ties $t", (0 until n).map(i => i.toLong -> Array.fill(8)(unit(2))), 5)
+      } ++ Seq(
+        // (1, 0) is equidistant from both init centroids: the lower cid wins
+        ("explicit tie", Seq(0L -> Array(0L, 0L, 0L, 0L), 1L -> Array(2L, 0L, 0L, 0L),
+          2L -> Array(1L, 0L, 0L, 0L), 3L -> Array(1L, 0L, 0L, 0L)), 2),
+        // two identical init vectors: every tie goes to cid 0, so cid 1
+        // stays empty and must keep its centroid
+        ("forced empty cluster", Seq(0L -> Array(5L, -5L, 1L, 1L), 1L -> Array(5L, -5L, 1L, 1L),
+          2L -> Array(7L, -3L, 0L, 2L), 3L -> Array(-1L, -9L, 4L, 4L)), 2),
+        ("k > n", Seq(4L -> Array(1L, 2L, 3L, 4L), 9L -> Array(-4L, -3L, -2L, -1L),
+          6L -> Array(0L, 0L, 7L, 0L)), 5))
+    for ((name, rows, k) <- cases; iters <- Seq(0, 1, 4)) {
+      val df = vecFrame(rows).repartition(3)
+      val got = Clustering.fitFixed(df, iters, k)
+      val want = refLloyd(rows, iters, k)
+      assert(got.map(_.toSeq).toSeq === want.map(_.toSeq).toSeq, s"$name, iters $iters")
+      if (name == "forced empty cluster" && iters == 1)
+        assert(got(1).toSeq === rows.head._2.toSeq, "empty cluster must keep its centroid")
+      if (name == "k > n") assert(got.length === rows.length)
+      // the 2- and 4-slice fits are the independent per-slice fits
+      val dims = rows.head._2.length
+      for (slices <- Seq(2, 4)) {
+        val w = dims / slices
+        val multi = Clustering.fitFixedSlices(df, slices, iters, k)
+        (0 until slices).foreach { s =>
+          val sliced = rows.map { case (id, e) => id -> e.slice(s * w, s * w + w) }
+          assert(multi(s).map(_.toSeq).toSeq === refLloyd(sliced, iters, k).map(_.toSeq).toSeq,
+            s"$name, iters $iters, slice $s of $slices")
+        }
+      }
+    }
+  }
+
+  test("fitFixed runs one Spark job per Lloyd round plus one for the init") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    val rnd = new scala.util.Random(5)
+    val df = vecFrame((0 until 200).map(i => i.toLong -> Array.fill(16)(rnd.nextInt(1000).toLong)))
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      for (iters <- Seq(1, 4)) {
+        groups.clear()
+        sc.setJobGroup("fit-job-count", "fitFixed job count")
+        try {
+          Clustering.fitFixed(df, iters, 6)
+          Clustering.fitFixedSlices(df, 4, iters, 6)
+          // the listener bus delivers in order: once the marker job is
+          // seen, every job of the fits has been counted
+          sc.setJobGroup("fit-job-count-marker", "listener drain marker")
+          sc.parallelize(Seq(1), 1).count()
+        } finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!groups.contains("fit-job-count-marker") && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        assert(groups.contains("fit-job-count-marker"), "listener bus did not drain")
+        val jobs = groups.toArray.count(_ == "fit-job-count")
+        assert(jobs <= 2 * (iters + 1), s"$jobs jobs for two fits of $iters rounds each")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("fitFixed degenerate input: empty, null vectors, wrong lengths") {
+    val base = (0 until 6).map(i => i.toLong -> Array(i.toLong, -i.toLong, 2L * i, 1L))
+    // empty input: an empty model (the IVF append fallback relies on it)
+    assert(Clustering.fitFixed(vecFrame(Nil), 4, 4).isEmpty)
+    assert(Clustering.fitFixedSlices(vecFrame(Nil), 2, 4, 4).forall(_.isEmpty))
+    // a null vector outside the init is skipped
+    val withNull = base :+ (9L -> (null: Array[Long]))
+    assert(Clustering.fitFixed(vecFrame(withNull), 4, 4).map(_.toSeq).toSeq ===
+      refLloyd(base, 4, 4).map(_.toSeq).toSeq)
+    // a null init vector, or a vector of the wrong length anywhere,
+    // names its vec_id
+    def rejects(rows: Seq[(Long, Array[Long])], id: Long): Unit = {
+      val e = intercept[IllegalArgumentException](Clustering.fitFixed(vecFrame(rows), 4, 4))
+      assert(e.getMessage.contains(s"vec_id $id"), e.getMessage)
+    }
+    rejects(base.updated(2, 2L -> null), 2L)
+    rejects(base.updated(5, 5L -> Array(1L, 2L, 3L)), 5L)
+    rejects(base.updated(1, 1L -> Array(1L, 2L, 3L, 4L, 5L)), 1L)
+  }
 }

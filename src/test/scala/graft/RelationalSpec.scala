@@ -501,6 +501,39 @@ class RelationalSpec extends SparkSuiteBase {
     cr.foreach(r => assert(r.getLong(1) === r.getLong(0) + 1L))
   }
 
+  test("skew-hardened slices: BIGINT heavies past 2^53 sort by Long order; ranks exact") {
+    // 2^60+1 and 2^60+2 round to the same double: sorted as doubles
+    // they keep mass order (2^60+2 first, it is heavier) and hand the
+    // keys' binary search an unsorted array; the double sketch alone
+    // sees one heavy value 2^60, which is no value of x
+    val h1 = (1L << 60) + 1L
+    val h2 = (1L << 60) + 2L
+    val n = 10000L
+    val r = pmod(col("id"), lit(20L))
+    val df = spark.range(n).select(
+      concat(lit("g"), pmod(col("id"), lit(2L))).as("grp"),
+      col("id"),
+      when(r < 6L, lit(h1))
+        .when(r < 18L, lit(h2))
+        .when(r === 18L, lit((1L << 60) - 5L) - pmod(col("id"), lit(89L)))
+        .otherwise(lit((1L << 60) + 3L) + pmod(col("id"), lit(97L))).as("x"))
+    val sliced = Relational.skewSliced(df, 16).get
+    Seq(h1, h2).foreach { h =>
+      val keys = sliced.where(col("x") === h).select("slc", "hg", "sub").distinct().count()
+      assert(keys > 1, s"heavy value $h must sub-split across window keys, got $keys")
+    }
+    val got = Relational.groupedRanks(df, 16).select("grp", "id", "rk").collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val want = df.select("grp", "id", "x").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .groupBy(_._1).values.flatMap { g =>
+        g.sortBy(t => (t._3, t._2)).zipWithIndex
+          .map { case (t, i) => (t._1, t._2) -> (i + 1L) }
+      }.toMap
+    assert(got.size === n.toInt)
+    assert(got === want)
+  }
+
   test("gini plans no single-partition sort of the data") {
     val plan = Relational.giniByGroup(spark, sf).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange SinglePartition"), s"plan:\n$plan")
