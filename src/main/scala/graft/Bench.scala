@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
+import graft.operators.{Artifacts, Clustering, Dedup, GraphIndex, Incremental, Pipeline,
+  Similarity, TextOps}
 
 /** Benchmark main: runs the headline SparkEntry queries (min-of-N,
   * warmed, memo-cleared — the per-round bar) PLUS a single-run
@@ -69,44 +71,20 @@ object Bench {
     //    cleared: the feed is input data (analogous to the testdata
     //    parquet itself), and every timed run still executes the complete
     //    streaming query over it.
-    // Product-state memos split by what a warm hit MEANS (ADVICE r7):
-    //  - result/model memos (K-Means fit, BPE merges, dup-component
-    //    labels): a warm hit replaces the row's compute with a cache
-    //    read and MASKS regressions — cleared before every headline
-    //    run and before every matrix rerun;
-    //  - staged INDICES (ivf cid-partitioned layout, dedup band +
-    //    shingle index): their one-time build cost is billed
-    //    explicitly by the lifecycle splits below, and a consumer row
-    //    probing a warm index still executes its full query — the
-    //    amortized steady state a standing corpus serves. The
-    //    headline loop clears these too (no headline query uses
+    // Product-state memos split by what a warm hit MEANS (ADVICE r7),
+    // which is the class every artifact declares in [[Artifacts]]:
+    //  - Model memos (fits, merges, codebooks): a warm hit replaces the
+    //    row's compute with a cache read and MASKS regressions —
+    //    cleared before every headline run and before every matrix
+    //    rerun;
+    //  - Index memos (staged indices, states, postings, the graph, the
+    //    dup components, the band index): their one-time build cost is
+    //    billed explicitly by the lifecycle splits below, and a
+    //    consumer row probing a warm index still executes its full
+    //    query — the amortized steady state a standing corpus serves.
+    //    The headline loop clears these too (no headline query uses
     //    them); the matrix rerun does NOT, so an index-consumer row
     //    reports the consumer path, not a re-staging.
-    def clearModelMemos(): Unit = {
-      graft.operators.Clustering.clearFitCache()
-      graft.operators.TextOps.clearMergeCache()
-      graft.operators.Similarity.clearPqCache()
-      graft.operators.Similarity.clearSqCache()
-    }
-    def clearIndexMemos(): Unit = {
-      graft.operators.Similarity.clearIndexCache()
-      graft.operators.Similarity.clearKnnCache()
-      graft.operators.Dedup.clearBandIndexCache()
-      // the dup-component closure is an INDEX-class artifact as of r12:
-      // built once by the dedup_cc lifecycle split below, consumed warm
-      // by q_dedup_cc/stats/keep_best/split_leakage — so matrix reruns
-      // keep it (consumer rows bill serve cost, not a rebuild, and the
-      // r11 matrix-ordering memo artifact is gone)
-      graft.operators.Dedup.clearComponentCache()
-      graft.operators.Incremental.clearAllStateCaches()
-      graft.operators.TextOps.clearPostingsCache()
-      graft.operators.TextOps.clearPostingsAppendCache()
-      // the staged co-purchase graph (round 13) is index-class: built
-      // once by the graph_lifecycle split, served warm by the ~14
-      // graph consumer rows in the matrix
-      graft.operators.GraphIndex.clearGraphCache()
-      graft.operators.TextOps.clearDocCharLenCache()
-    }
 
     val Runs = 2
     var failed = List.empty[String]
@@ -122,8 +100,8 @@ object Bench {
       var aborted = !warmupOk
       var r = 0
       while (!aborted && r < Runs) {
-        clearModelMemos()
-        clearIndexMemos()
+        Artifacts.clear(Artifacts.Model)
+        Artifacts.clear(Artifacts.Index)
         val t0 = System.nanoTime()
         try {
           runOnce()
@@ -202,12 +180,12 @@ object Bench {
     val ivfLifecycle: Seq[(String, Double)] =
       try {
         val bIdx = timedN({
-          graft.operators.Clustering.clearFitCache()
-          graft.operators.Similarity.clearIvfIndexCache()
-        })(graft.operators.Similarity.stagedIvfIndex(spark, sfDir))
+          Artifacts.clear(Clustering.FitFixed)
+          Artifacts.clear(Similarity.IvfIndex)
+        })(Similarity.stagedIvfIndex(spark, sfDir))
         val sIdx = timedN(())(force(SparkEntry.queries("q_simsearch_ivf_indexed")(spark, sfDir)))
-        val bApp = timedN(graft.operators.Similarity.clearIvfAppendCache())(
-          graft.operators.Similarity.stagedAppendedIndex(spark, sfDir))
+        val bApp = timedN(Artifacts.clear(Similarity.IvfAppend))(
+          Similarity.stagedAppendedIndex(spark, sfDir))
         val sApp = timedN(())(force(SparkEntry.queries("q_simsearch_ivf_append")(spark, sfDir)))
         Seq("ivf_indexed_build_sec" -> bIdx, "ivf_indexed_search_sec" -> sIdx,
           "ivf_append_build_sec" -> bApp, "ivf_append_search_sec" -> sApp) ++
@@ -227,8 +205,8 @@ object Bench {
     // Recall rows guard quantizer changes the same way the ivf rows do.
     val pqLifecycle: Seq[(String, Double)] =
       try {
-        val bPq = timedN(graft.operators.Similarity.clearPqCache())(
-          graft.operators.Similarity.pqCodebooks(spark, sfDir))
+        val bPq = timedN(Artifacts.clear(Similarity.PqBooks))(
+          Similarity.pqCodebooks(spark, sfDir))
         val sPq = timedN(())(force(SparkEntry.queries("q_simsearch_pq")(spark, sfDir)))
         Seq("pq_build_sec" -> bPq, "pq_search_sec" -> sPq) ++
           recall("q_simsearch_pq") ++
@@ -244,8 +222,8 @@ object Bench {
     // build bills encode+partitioned-write only.
     val pqIndexLifecycle: Seq[(String, Double)] =
       try {
-        val bPqIdx = timedN(graft.operators.Similarity.clearPqIndexCache())(
-          graft.operators.Similarity.stagedPqIndex(spark, sfDir))
+        val bPqIdx = timedN(Artifacts.clear(Similarity.PqIndex))(
+          Similarity.stagedPqIndex(spark, sfDir))
         val sPqIdx = timedN(())(force(SparkEntry.queries("q_simsearch_pq_indexed")(spark, sfDir)))
         Seq("pq_index_build_sec" -> bPqIdx, "pq_index_search_sec" -> sPqIdx)
       } catch { case NonFatal(e) =>
@@ -258,25 +236,22 @@ object Bench {
     // ivfpq build bills fit+codebooks on BOTH runs; the catch restores
     // the memo if this step aborts (the ivf lifecycle above left it
     // warm on purpose — the matrix ivf rows must not silently change
-    // basis on this failure path). NOTE clearPqCache would also clear
-    // the flat-PQ books measured above — the per-artifact
-    // clearIvfpqModelCache keeps them warm, the contract the matrix pq
-    // rows rely on.
+    // basis on this failure path). Only the ivfpq model kind is
+    // cleared: the flat-PQ books measured above stay warm, the
+    // contract the matrix pq rows rely on.
     val ivfpqModelLifecycle: Seq[(String, Double)] =
       try {
         val bIvfpq = timedN({
-          graft.operators.Clustering.clearFitCache()
-          graft.operators.Similarity.clearIvfpqModelCache()
-        })(graft.operators.Similarity.ivfpqModel(spark, sfDir))
+          Artifacts.clear(Clustering.FitFixed)
+          Artifacts.clear(Similarity.IvfpqModel)
+        })(Similarity.ivfpqModel(spark, sfDir))
         val sIvfpq = timedN(())(force(SparkEntry.queries("q_simsearch_ivfpq")(spark, sfDir)))
         Seq("ivfpq_build_sec" -> bIvfpq, "ivfpq_search_sec" -> sIvfpq) ++
           recall("q_simsearch_ivfpq")
       } catch { case NonFatal(e) =>
         System.err.println(s"[bench] ivfpq model lifecycle failed: ${e.getMessage}")
-        try graft.operators.Clustering.fitFixed(spark, sfDir,
-          graft.operators.Clustering.Iters,
-          graft.operators.Similarity.ivfK(
-            graft.operators.Similarity.corpusSize(spark, sfDir)))
+        try Clustering.fitFixed(spark, sfDir, Clustering.Iters,
+          Similarity.ivfK(Similarity.corpusSize(spark, sfDir)))
         catch { case NonFatal(_) => () }
         Seq.empty
       }
@@ -289,8 +264,8 @@ object Bench {
     // actually pays).
     val ivfpqIndexLifecycle: Seq[(String, Double)] =
       try {
-        val bIvfpqIdx = timedN(graft.operators.Similarity.clearIvfpqIndexCache())(
-          graft.operators.Similarity.stagedIvfpqIndex(spark, sfDir))
+        val bIvfpqIdx = timedN(Artifacts.clear(Similarity.IvfpqIndex))(
+          Similarity.stagedIvfpqIndex(spark, sfDir))
         val sIvfpqIdx = timedN(())(force(SparkEntry.queries("q_simsearch_ivfpq_indexed")(spark, sfDir)))
         Seq("ivfpq_index_build_sec" -> bIvfpqIdx,
           "ivfpq_index_search_sec" -> sIvfpqIdx)
@@ -306,8 +281,8 @@ object Bench {
     // serve path).
     val ivfpqAppendLifecycle: Seq[(String, Double)] =
       try {
-        val bApp = timedN(graft.operators.Similarity.clearIvfpqAppendCache())(
-          graft.operators.Similarity.stagedAppendedIvfpqIndex(spark, sfDir))
+        val bApp = timedN(Artifacts.clear(Similarity.IvfpqAppend))(
+          Similarity.stagedAppendedIvfpqIndex(spark, sfDir))
         val sApp = timedN(())(force(SparkEntry.queries("q_simsearch_ivfpq_append")(spark, sfDir)))
         Seq("ivfpq_append_build_sec" -> bApp, "ivfpq_append_search_sec" -> sApp)
       } catch { case NonFatal(e) =>
@@ -321,11 +296,11 @@ object Bench {
     // candidate scoring (no corpus signature pass — the staging win).
     val lshLifecycle: Seq[(String, Double)] =
       try {
-        val bIdx = timedN(graft.operators.Similarity.clearLshIndexCache())(
-          graft.operators.Similarity.stagedLshIndex(spark, sfDir))
+        val bIdx = timedN(Artifacts.clear(Similarity.LshIndex))(
+          Similarity.stagedLshIndex(spark, sfDir))
         val sIdx = timedN(())(force(SparkEntry.queries("q_simsearch_lsh_indexed")(spark, sfDir)))
-        val bApp = timedN(graft.operators.Similarity.clearLshAppendCache())(
-          graft.operators.Similarity.stagedAppendedLshIndex(spark, sfDir))
+        val bApp = timedN(Artifacts.clear(Similarity.LshAppend))(
+          Similarity.stagedAppendedLshIndex(spark, sfDir))
         val sApp = timedN(())(force(SparkEntry.queries("q_simsearch_lsh_append")(spark, sfDir)))
         Seq("lsh_index_build_sec" -> bIdx, "lsh_index_search_sec" -> sIdx,
           "lsh_append_build_sec" -> bApp, "lsh_append_search_sec" -> sApp)
@@ -342,11 +317,11 @@ object Bench {
     // pq/sq/lsh rows guard theirs.
     val bqLifecycle: Seq[(String, Double)] =
       try {
-        val bIdx = timedN(graft.operators.Similarity.clearBqIndexCache())(
-          graft.operators.Similarity.stagedBqIndex(spark, sfDir))
+        val bIdx = timedN(Artifacts.clear(Similarity.BqIndex))(
+          Similarity.stagedBqIndex(spark, sfDir))
         val sIdx = timedN(())(force(SparkEntry.queries("q_simsearch_bq_indexed")(spark, sfDir)))
-        val bApp = timedN(graft.operators.Similarity.clearBqAppendCache())(
-          graft.operators.Similarity.stagedAppendedBqIndex(spark, sfDir))
+        val bApp = timedN(Artifacts.clear(Similarity.BqAppend))(
+          Similarity.stagedAppendedBqIndex(spark, sfDir))
         val sApp = timedN(())(force(SparkEntry.queries("q_simsearch_bq_append")(spark, sfDir)))
         Seq("bq_index_build_sec" -> bIdx, "bq_index_search_sec" -> sIdx,
           "bq_append_build_sec" -> bApp, "bq_append_search_sec" -> sApp) ++
@@ -362,17 +337,17 @@ object Bench {
     // fingerprint pass, no documents scan — the staging win).
     val winnowLifecycle: Seq[(String, Double)] =
       try {
-        val bIdx = timedN(graft.operators.TextOps.clearWinnowIndexCache())(
-          graft.operators.TextOps.stagedWinnowIndex(spark, sfDir))
+        val bIdx = timedN(Artifacts.clear(TextOps.WinnowIndex))(
+          TextOps.stagedWinnowIndex(spark, sfDir))
         val sIdx = timedN(())(force(SparkEntry.queries("q_winnow_dups_indexed")(spark, sfDir)))
-        val bApp = timedN(graft.operators.TextOps.clearWinnowAppendCache())(
-          graft.operators.TextOps.stagedAppendedWinnowIndex(spark, sfDir))
+        val bApp = timedN(Artifacts.clear(TextOps.WinnowAppend))(
+          TextOps.stagedAppendedWinnowIndex(spark, sfDir))
         val sApp = timedN(())(force(SparkEntry.queries("q_winnow_dups_append")(spark, sfDir)))
         // stats-grain serve (VERDICT r12 #4): per-doc coverage from the
         // warm artifact + the doc-length sidecar — the ≤~10 s answer to
         // "how duplicated is each doc" beside the pair-mass-bound serve
-        val bLen = timedN(graft.operators.TextOps.clearDocCharLenCache())(
-          graft.operators.TextOps.stagedDocCharLens(spark, sfDir))
+        val bLen = timedN(Artifacts.clear(TextOps.DocCharLens))(
+          TextOps.stagedDocCharLens(spark, sfDir))
         val sStats = timedN(())(force(SparkEntry.queries("q_winnow_stats_indexed")(spark, sfDir)))
         Seq("winnow_index_build_sec" -> bIdx, "winnow_index_search_sec" -> sIdx,
           "winnow_append_build_sec" -> bApp, "winnow_append_search_sec" -> sApp,
@@ -391,9 +366,9 @@ object Bench {
     val dedupLifecycle: Seq[(String, Double)] =
       try {
         val bBand = timedN({
-          graft.operators.Dedup.clearBandIndexCache()
-          graft.operators.Dedup.clearComponentCache()
-        })(graft.operators.Dedup.stagedBandIndex(spark, sfDir))
+          Artifacts.clear(Dedup.BandIndex)
+          Artifacts.clear(Dedup.Components)
+        })(Dedup.stagedBandIndex(spark, sfDir))
         val sInc = timedN(())(force(SparkEntry.queries("q_dedup_append")(spark, sfDir)))
         Seq("dedup_append_build_sec" -> bBand, "dedup_append_inc_sec" -> sInc)
       } catch { case NonFatal(e) =>
@@ -409,8 +384,8 @@ object Bench {
     // ledger algebra).
     val webLifecycle: Seq[(String, Double)] =
       try {
-        val bWeb = timedN(graft.operators.Pipeline.clearWebStateCache())(
-          graft.operators.Pipeline.stagedWebState(spark, sfDir))
+        val bWeb = timedN(Artifacts.clear(Pipeline.WebState))(
+          Pipeline.stagedWebState(spark, sfDir))
         val sWeb = timedN(())(
           force(SparkEntry.queries("q_pipeline_web_append")(spark, sfDir)))
         Seq("web_append_build_sec" -> bWeb, "web_append_inc_sec" -> sWeb)
@@ -424,14 +399,14 @@ object Bench {
     // billed once, like an ANN index build (dupComponents ends in an
     // eager lineage cut, so the call IS the materialization); serve =
     // the q_dedup_cc consumer row over the warm closure. The memo is
-    // left warm and matrix reruns no longer clear it (it moved to
-    // clearIndexMemos), so the four consumer rows (cc/stats/keep_best/
+    // left warm and matrix reruns no longer clear it (it is an Index
+    // artifact), so the four consumer rows (cc/stats/keep_best/
     // split_leakage) bill serve cost regardless of matrix ordering —
     // the r11 "keep_best rides its alphabetical predecessor" artifact.
     val dedupCcLifecycle: Seq[(String, Double)] =
       try {
-        val bCc = timedN(graft.operators.Dedup.clearComponentCache())(
-          graft.operators.Dedup.dupComponents(spark, sfDir))
+        val bCc = timedN(Artifacts.clear(Dedup.Components))(
+          Dedup.dupComponents(spark, sfDir))
         val sCc = timedN(())(force(SparkEntry.queries("q_dedup_cc")(spark, sfDir)))
         Seq("dedup_cc_build_sec" -> bCc, "dedup_cc_serve_sec" -> sCc)
       } catch { case NonFatal(e) =>
@@ -446,8 +421,8 @@ object Bench {
     // matrix row, same contract as the other staged artifacts.
     val incrLifecycle: Seq[(String, Double)] =
       try {
-        val bState = timedN(graft.operators.Incremental.clearAggStateCache())(
-          graft.operators.Incremental.stagedAggState(spark, sfDir))
+        val bState = timedN(Artifacts.clear(Incremental.AggState))(
+          Incremental.stagedAggState(spark, sfDir))
         val sMerge = timedN(())(force(SparkEntry.queries("q_incr_agg")(spark, sfDir)))
         Seq("incr_agg_build_sec" -> bState, "incr_agg_merge_sec" -> sMerge)
       } catch { case NonFatal(e) =>
@@ -462,16 +437,16 @@ object Bench {
     // per-query pruned lookup.
     val idxLifecycle: Seq[(String, Double)] =
       (try {
-        val bIdx = timedN(graft.operators.Incremental.clearIndexStateCache())(
-          graft.operators.Incremental.stagedIndexState(spark, sfDir))
+        val bIdx = timedN(Artifacts.clear(Incremental.IndexState))(
+          Incremental.stagedIndexState(spark, sfDir))
         val sIdx = timedN(())(force(SparkEntry.queries("q_incr_inverted")(spark, sfDir)))
         Seq("incr_idx_build_sec" -> bIdx, "incr_idx_merge_sec" -> sIdx)
       } catch { case NonFatal(e) =>
         System.err.println(s"[bench] incr-index lifecycle split failed: ${e.getMessage}")
         Seq.empty
       }) ++ (try {
-        val bPost = timedN(graft.operators.TextOps.clearPostingsCache())(
-          graft.operators.TextOps.stagedPostings(spark, sfDir))
+        val bPost = timedN(Artifacts.clear(TextOps.Postings))(
+          TextOps.stagedPostings(spark, sfDir))
         val sLook = timedN(())(force(SparkEntry.queries("q_index_lookup")(spark, sfDir)))
         Seq("postings_build_sec" -> bPost, "index_lookup_sec" -> sLook)
       } catch { case NonFatal(e) =>
@@ -488,8 +463,8 @@ object Bench {
     // early-exit round counts, VERDICT r12 #5).
     val graphLifecycle: Seq[(String, Double)] =
       try {
-        val bG = timedN(graft.operators.GraphIndex.clearGraphCache())(
-          graft.operators.GraphIndex.stagedGraph(spark, sfDir))
+        val bG = timedN(Artifacts.clear(GraphIndex.Graph))(
+          GraphIndex.stagedGraph(spark, sfDir))
         val sWp = timedN(())(force(SparkEntry.queries("q_walk_pairs")(spark, sfDir)))
         val sKc = timedN(())(force(SparkEntry.queries("q_kcore")(spark, sfDir)))
         val sLp = timedN(())(force(SparkEntry.queries("q_label_prop")(spark, sfDir)))
@@ -549,8 +524,8 @@ object Bench {
     // With the model-memo clear, both runs are genuine computations: a
     // memo-warm first run stays the row's (documented,
     // first-consumer-pays) basis via min(); a memo-cold stalled first
-    // run gets an honest cold rerun. Staged indices stay warm (see
-    // clearIndexMemos): an index-consumer row keeps measuring the
+    // run gets an honest cold rerun. Staged indices stay warm (the
+    // Index class): an index-consumer row keeps measuring the
     // consumer path, with the build billed by the lifecycle split.
     // Cost: later rows that would have ridden a cleared model memo
     // re-pay it once — bounded by one extra build per rerun.
@@ -565,7 +540,7 @@ object Bench {
           val t1 = once()
           val t = if (t1 > RerunThresholdSec) {
             mReruns += 1
-            clearModelMemos()
+            Artifacts.clear(Artifacts.Model)
             math.min(t1, once())
           } else t1
           name -> t

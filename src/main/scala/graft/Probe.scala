@@ -15,16 +15,13 @@ object Probe {
     }
     what match {
       case "lsh_lifecycle" =>
-        import graft.operators.Similarity
+        import graft.operators.{Artifacts, Similarity}
         for (i <- 1 to 2) {
-          Similarity.clearLshIndexCache()
+          Artifacts.clear(Similarity.LshIndex)
           timed(s"lsh_index_build$i")(Similarity.stagedLshIndex(spark, dir))
-          Similarity.clearLshAppendCache()
+          Artifacts.clear(Similarity.LshAppend)
           timed(s"lsh_append_build$i")(Similarity.stagedAppendedLshIndex(spark, dir))
         }
-      case "lsh_append_parts" =>
-        import graft.operators.Similarity
-        timed("parts")(Similarity.probeLshAppendParts(spark, dir, timed))
       case "audio_micro" =>
         // codec micro-benchmark outside Spark: encode+decode N clips on
         // 1 vs 32 threads — separates per-row codec cost from contention
@@ -200,7 +197,7 @@ object Probe {
         val picked = if (b.contains(':'))
           b.dropWhile(_ != ':').drop(1).split(",").map(_.trim).toSeq
         else all
-        graft.operators.GraphIndex.clearGraphCache()
+        graft.operators.Artifacts.clear(graft.operators.GraphIndex.Graph)
         timed("graph_build")(graft.operators.GraphIndex.stagedGraph(spark, dir))
         for (name <- picked) {
           try {
@@ -223,316 +220,13 @@ object Probe {
           }
         }
 
-      case "kcore_int" =>
-        // VERDICT r13 #3: is the kcore/labelProp 1.5x-over-linear sf10
-        // residue working-set spill (constant factor) or plan shape?
-        // Controlled experiment: the SAME df-form peel over the SAME
-        // projection edges, long node ids (baseline) vs int node ids
-        // (halves shuffle key+payload bytes). If the ratio moves, the
-        // diagnosis (spill, not shape) is proven and int encoding is
-        // free speed at the 2M-node grain.
-        import org.apache.spark.sql.functions._
-        val lp = graft.sources.Tables(spark, dir, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-          .distinct()
-        val undL = graft.Engine.cut(lp.select(col("ok"), col("p").as("u"))
-          .join(lp.select(col("ok"), col("p").as("v")), "ok")
-          .where(col("u") < col("v")).select("u", "v").distinct())
-        val m = undL.count()
-        val n = undL.select(col("u").as("x"))
-          .unionAll(undL.select(col("v").as("x"))).distinct().count()
-        val k = (3L * (2L * m / n) / 4L).toInt
-        println(s"edges: $m nodes: $n k: $k")
-        // the sf10 replica ids are cp·10⁸ + orig (GenSf1.KeyOff) and
-        // overflow INT; dictionary-encode them densely the way a
-        // production int-encoding pass would: (replica, orig) →
-        // replica·(maxOrig+1) + orig. Verify the assumed orig bound
-        // before trusting the bijection.
-        val maxOrig = undL.select(greatest(max(col("u") % 100000000L),
-          max(col("v") % 100000000L))).head().getLong(0)
-        require(maxOrig < 100000L, s"orig key bound broken: $maxOrig")
-        def enc(name: String) = expr(
-          s"CAST(($name div 100000000) * ${maxOrig + 1} + $name % 100000000 AS INT)")
-        val undI = graft.Engine.cut(
-          undL.select(enc("u").as("u"), enc("v").as("v")))
-        for ((tag, und) <- Seq(("long", undL), ("int", undI))) {
-          var best = Double.MaxValue
-          for (_ <- 1 to 2) {
-            val t0 = System.nanoTime()
-            graft.operators.Graphs.kcore(und, graft.operators.Graphs.KcoreRounds, k)
-              .write.format("noop").mode("overwrite").save()
-            best = math.min(best, (System.nanoTime() - t0) / 1e9)
-          }
-          println(f"kcore_$tag: $best%.1f s (rounds ${graft.operators.Graphs.lastKcoreRounds})")
-        }
-
-      case "graph_enc" =>
-        // VERDICT r14 #3: END-TO-END in-serve dictionary encode A/B for
-        // the two ~15x/decade iterative serves. The r13 kcore_int probe
-        // proved 31% on the peel CORE via a structural (replica-aware)
-        // encode; BASELINE's reason for not adopting it in the serve —
-        // "the V-grain encode/decode joins eat the win" — was an
-        // argument, not a number. This measures the number: arm A = the
-        // catalog serve as-is off the warm bucketed artifact; arm B =
-        // the SAME round core (kcoreAdj/labelPropAdj) over an adjacency
-        // dictionary-encoded IN the serve (no corpus assumptions: a
-        // range-partitioned per-partition row_number dict — globally
-        // MONOTONE, so LPA's (count desc, label asc) argmax is
-        // preserved through encode/decode — broadcast to both endpoint
-        // joins, one |E| re-key shuffle, V-grain decode join at the
-        // end). min-of-2 both arms; result checksums printed so the
-        // arms' semantic equality is part of the probe output.
-        import org.apache.spark.sql.DataFrame
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.expressions.Window
-        val (nN, mM) = graft.operators.GraphIndex.projStats(spark, dir)
-        val kk = (3L * (2L * mM / nN) / 4L).toInt
-        require(nN < Int.MaxValue, s"node count $nN overflows the int dict")
-        println(s"n=$nN m=$mM k=$kk")
-        graft.operators.GraphIndex.clearGraphCache()
-        timed("graph_build")(graft.operators.GraphIndex.stagedGraph(spark, dir))
-        def forceSum(df: DataFrame, a: String, b: String): String =
-          df.agg(count(lit(1)), sum(col(a)), sum(col(b))).head().toString
-        def minOf2(label: String)(f: => String): Unit = {
-          var best = Double.MaxValue
-          var chk = ""
-          for (_ <- 1 to 2) {
-            val t0 = System.nanoTime()
-            chk = f
-            best = math.min(best, (System.nanoTime() - t0) / 1e9)
-          }
-          println(f"$label: $best%.1f s  checksum=$chk")
-        }
-        // the dict is a pure function of the staged node set; build it
-        // fresh inside every timed arm-B run (it IS the in-serve cost
-        // being measured)
-        def dict(): DataFrame = {
-          val parts = graft.operators.GraphIndex.projEdges(spark, dir)
-            .select(col("src")).distinct()
-            .repartitionByRange(32, col("src"))
-            .select(col("src"), spark_partition_id().as("pid"))
-          val local = graft.Engine.cut(parts.withColumn("rn",
-            row_number().over(Window.partitionBy("pid").orderBy("src"))
-              .cast("long") - 1L))
-          // exclusive prefix offsets over the 32 range buckets: the only
-          // driver state is one row per partition
-          val cnts = local.groupBy("pid").agg(count(lit(1)).as("c"))
-            .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-          var acc = 0L
-          val off = cnts.map { case (p, c) => val o = acc; acc += c; p -> o }.toMap
-          val d = graft.Engine.cut(local.select(col("src"),
-            (col("rn") + element_at(typedLit(off), col("pid")))
-              .cast("int").as("nid")))
-          graft.Engine.free(local)
-          d
-        }
-        def encodedAdj(d: DataFrame): DataFrame = {
-          val adj = graft.operators.GraphIndex.projEdges(spark, dir)
-          val a = graft.Engine.cut(
-            adj.join(broadcast(d), "src")
-              .select(col("nid").as("s"), col("dst"))
-              .join(broadcast(d.withColumnRenamed("src", "dst")
-                .withColumnRenamed("nid", "nidd")), "dst")
-              .select(col("s").as("src"), col("nidd").as("dst"))
-              .repartition(col("src")))
-          a
-        }
-        minOf2("kcore_long") {
-          forceSum(SparkEntry.queries("q_kcore")(spark, dir), "node", "deg")
-        }
-        minOf2("kcore_enc") {
-          val d = dict()
-          val core = graft.operators.Graphs.kcoreAdj(
-            encodedAdj(d), graft.operators.Graphs.KcoreRounds, kk)
-          val out = core.join(
-            broadcast(d.select(col("nid").as("node"), col("src").as("orig"))),
-            "node").select(col("orig").as("node"), col("deg"))
-          val chk = forceSum(out, "node", "deg")
-          graft.Engine.free(d)
-          chk
-        }
-        minOf2("label_prop_long") {
-          forceSum(SparkEntry.queries("q_label_prop")(spark, dir), "node", "lbl")
-        }
-        minOf2("label_prop_enc") {
-          val d = dict()
-          val lab = graft.operators.Graphs.labelPropAdj(
-            encodedAdj(d), graft.operators.Graphs.LpaRounds)
-          val out = lab
-            .join(broadcast(d.select(col("nid").as("node"), col("src").as("n0"))),
-              "node")
-            .join(broadcast(d.select(col("nid").as("lbl"), col("src").as("l0"))),
-              "lbl")
-            .select(col("n0").as("node"), col("l0").as("lbl"))
-          val chk = forceSum(out, "node", "lbl")
-          graft.Engine.free(d)
-          chk
-        }
-
-      case "r16_enc" =>
-        // VERDICT r15 #3: INGEST-TIME dictionary encode A/B. graph_enc
-        // measured the IN-SERVE encode and rejected it (the per-serve
-        // dict build + |E| re-key ate the win at sf10); this probe
-        // moves the encode OUTSIDE the timed region — the dict and the
-        // int-keyed adjacency are built once, like artifact tables —
-        // and times only the serves: arm A = catalog kcore/label_prop
-        // off the warm long-keyed bucketed artifact, arm B = the SAME
-        // round cores over the pre-encoded int adjacency + the V-grain
-        // decode join the real serve would pay. The encode build is
-        // timed separately (the graph_build delta adopting it costs).
-        import org.apache.spark.sql.DataFrame
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.expressions.Window
-        val (nN, mM) = graft.operators.GraphIndex.projStats(spark, dir)
-        val kk = (3L * (2L * mM / nN) / 4L).toInt
-        require(nN < Int.MaxValue, s"node count $nN overflows the int dict")
-        println(s"n=$nN m=$mM k=$kk")
-        graft.operators.GraphIndex.clearGraphCache()
-        timed("graph_build")(graft.operators.GraphIndex.stagedGraph(spark, dir))
-        def forceSum(df: DataFrame, a: String, b: String): String =
-          df.agg(count(lit(1)), sum(col(a)), sum(col(b))).head().toString
-        def minOf2(label: String)(f: => String): Unit = {
-          var best = Double.MaxValue
-          var chk = ""
-          for (_ <- 1 to 2) {
-            val t0 = System.nanoTime()
-            chk = f
-            best = math.min(best, (System.nanoTime() - t0) / 1e9)
-          }
-          println(f"$label: $best%.1f s  checksum=$chk")
-        }
-        // The artifact (new code) is already CODE-keyed. Symmetric
-        // width A/B: both arms are cut, src-repartitioned adjacency
-        // frames of IDENTICAL shape — arm LONG decoded back to the
-        // original ids through the dict, arm ENC the codes as stored —
-        // so the delta isolates exactly what the ingest-time encode
-        // buys per serve (key/payload width + the V-grain decode join
-        // the enc arm pays at output). The catalog rows then time the
-        // real end-to-end encoded serves off the bucketed artifact.
-        val d0 = graft.operators.GraphIndex.dict(spark, dir)
-        val proja = graft.operators.GraphIndex.projEdges(spark, dir)
-        var longAdj: DataFrame = null
-        var encAdj: DataFrame = null
-        timed("arm_build") {
-          longAdj = graft.Engine.cut(proja
-            .join(d0.select(col("code").as("src"), col("id").as("s0")), "src")
-            .join(d0.select(col("code").as("dst"), col("id").as("d0")), "dst")
-            .select(col("s0").as("src"), col("d0").as("dst"))
-            .repartition(col("src")))
-          encAdj = graft.Engine.cut(
-            proja.select(col("src"), col("dst")).repartition(col("src")))
-        }
-        // .select wrapper: the cores Engine.free their input frame
-        // (a no-op on the real bucketed scans); keep the shared cuts
-        // alive across runs by handing them a Project over it
-        minOf2("kcore_long") {
-          forceSum(graft.operators.Graphs.kcoreAdj(
-            longAdj.select(col("src"), col("dst")),
-            graft.operators.Graphs.KcoreRounds, kk), "node", "deg")
-        }
-        minOf2("kcore_enc") {
-          val core = graft.operators.Graphs.kcoreAdj(
-            encAdj.select(col("src"), col("dst")),
-            graft.operators.Graphs.KcoreRounds, kk)
-          val out = core.join(
-            d0.select(col("code").as("node"), col("id").as("orig")),
-            "node").select(col("orig").as("node"), col("deg"))
-          forceSum(out, "node", "deg")
-        }
-        minOf2("label_prop_long") {
-          forceSum(graft.operators.Graphs.labelPropAdj(
-            longAdj.select(col("src"), col("dst")),
-            graft.operators.Graphs.LpaRounds), "node", "lbl")
-        }
-        minOf2("label_prop_enc") {
-          val lab = graft.operators.Graphs.labelPropAdj(
-            encAdj.select(col("src"), col("dst")),
-            graft.operators.Graphs.LpaRounds)
-          val out = lab
-            .join(d0.select(col("code").as("node"), col("id").as("n0")),
-              "node")
-            .join(d0.select(col("code").as("lbl"), col("id").as("l0")),
-              "lbl")
-            .select(col("n0").as("node"), col("l0").as("lbl"))
-          forceSum(out, "node", "lbl")
-        }
-        minOf2("kcore_catalog_enc") {
-          forceSum(SparkEntry.queries("q_kcore")(spark, dir), "node", "deg")
-        }
-        minOf2("label_prop_catalog_enc") {
-          forceSum(SparkEntry.queries("q_label_prop")(spark, dir), "node", "lbl")
-        }
-        minOf2("degree_dist_catalog_enc") {
-          forceSum(SparkEntry.queries("q_degree_dist")(spark, dir),
-            "degree", "n_nodes")
-        }
-
-      case "r16_enc2" =>
-        // CATALOG-vs-CATALOG width A/B: both arms are bucketed+sorted
-        // parquet tables of the SAME rows (the shape the real serves
-        // read — r16_enc's cut-frame arms measured the width effect on
-        // RDD-scan frames, but LPA re-references its adjacency ~2x per
-        // round and the page-cache parquet re-scan beats the block
-        // store, so the decision needs bucketed arms). Arm LONG: the
-        // proja rows decoded to original ids, bucket-written to a temp
-        // root; arm ENC: the artifact's code-keyed proja + the V-grain
-        // decode join at output. Same window, min-of-2, checksums
-        // printed.
-        import org.apache.spark.sql.DataFrame
-        import org.apache.spark.sql.functions._
-        val (nN, mM) = graft.operators.GraphIndex.projStats(spark, dir)
-        val kk = (3L * (2L * mM / nN) / 4L).toInt
-        println(s"n=$nN m=$mM k=$kk")
-        def forceSum(df: DataFrame, a: String, b: String): String =
-          df.agg(count(lit(1)), sum(col(a)), sum(col(b))).head().toString
-        def minOf2(label: String)(f: => String): Unit = {
-          var best = Double.MaxValue
-          var chk = ""
-          for (_ <- 1 to 2) {
-            // nudge the ContextCleaner: dead per-run cuts/broadcasts are
-            // only discovered on GC, and at the sf10 grain letting them
-            // pile up ends in a heartbeat-killing full GC mid-arm
-            System.gc()
-            val t0 = System.nanoTime()
-            chk = f
-            best = math.min(best, (System.nanoTime() - t0) / 1e9)
-          }
-          println(f"$label: $best%.1f s  checksum=$chk")
-        }
-        val d0 = graft.operators.GraphIndex.dict(spark, dir)
-        val tmpRoot = graft.Engine.workDir("graft-enc2-").getAbsolutePath
-        timed("long_table_build") {
-          graft.operators.GraphIndex.bucketWrite(
-            graft.operators.GraphIndex.projEdges(spark, dir)
-              .join(d0.select(col("code").as("src"), col("id").as("s0")), "src")
-              .join(d0.select(col("code").as("dst"), col("id").as("d0")), "dst")
-              .select(col("s0").as("src"), col("d0").as("dst")),
-            tmpRoot, "proja_long")
-        }
-        val longAdj = graft.operators.GraphIndex.bucketedTable(
-          spark, tmpRoot, "proja_long", "src BIGINT, dst BIGINT")
-        minOf2("label_prop_catalog_long") {
-          forceSum(graft.operators.Graphs.labelPropAdj(longAdj,
-            graft.operators.Graphs.LpaRounds), "node", "lbl")
-        }
-        minOf2("label_prop_catalog_enc") {
-          forceSum(SparkEntry.queries("q_label_prop")(spark, dir), "node", "lbl")
-        }
-        minOf2("kcore_catalog_long") {
-          forceSum(graft.operators.Graphs.kcoreAdj(longAdj,
-            graft.operators.Graphs.KcoreRounds, kk), "node", "deg")
-        }
-        minOf2("kcore_catalog_enc") {
-          forceSum(SparkEntry.queries("q_kcore")(spark, dir), "node", "deg")
-        }
-
       case "web_append_parts" =>
         // phase split of curateWebAppend: where does the inc row go?
         import org.apache.spark.sql.functions._
         import graft.operators.{Dedup, Pipeline, TextOps}
         def force(df: org.apache.spark.sql.DataFrame): Unit =
           df.write.format("noop").mode("overwrite").save()
-        graft.operators.Pipeline.clearWebStateCache()
+        graft.operators.Artifacts.clear(Pipeline.WebState)
         timed("staged_build")(Pipeline.stagedWebState(spark, dir))
         for (i <- 1 to 2) {
           val (root, fixtureCut, deltaDocs) = Pipeline.stagedWebState(spark, dir)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
 import graft.functions.NearestLists
 import graft.sources.Tables
+import Artifacts.{Kind, Model}
 
 /** K-Means clustering over `embeddings` (SURVEY §2 B21) — the proper
   * completion of the reference's unfinished sketch (`kmeans.go:5-25`,
@@ -58,13 +59,8 @@ object Clustering {
         col("best.cid").as("cid"), col("best.d2").as("d2"))
 
   /** Lloyd's K-Means driver loop: returns the fitted centroids (k·64
-    * doubles of driver state — constant in corpus size). Also the coarse
-    * quantizer for `Similarity.ivfTopK`. */
-  private val fitCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, Int, String), Array[Array[Double]]]()
-
-  /** Drop all memoized fits (bench steady-state timing / data-swap hook). */
-  def clearFitCache(): Unit = { fitCache.clear(); fitFixedCache.clear() }
+    * doubles of driver state — constant in corpus size). */
+  private[graft] val Fit = Kind("kmeans-fit", Model, "embeddings")
 
   def fit(spark: SparkSession, dir: String, iters: Int = Iters,
           k: Int = K): Array[Array[Double]] =
@@ -73,8 +69,7 @@ object Clustering {
     // q_simsearch_ivf and the blocked embed-dedup (3× the most expensive
     // driver loop). The memo goes stale when the table is regenerated in
     // place (Fs fingerprint).
-    fitCache.getOrElseUpdate((dir, iters, k, graft.Fs.tableFingerprint(dir, "embeddings")),
-      fit(vecs(spark, dir), iters, k))
+    Artifacts.memo(Fit, dir, iters, k)(fit(vecs(spark, dir), iters, k))
 
   /** df form: expects (vec_id: Long, e: Array[Double]); not memoized. */
   def fit(vectors: DataFrame, iters: Int): Array[Array[Double]] =
@@ -154,16 +149,14 @@ object Clustering {
   private def roundDiv(s: Long, n: Long): Long =
     if (s >= 0) (2 * s + n) / (2 * n) else -((2 * -s + n) / (2 * n))
 
-  private val fitFixedCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, Int, String), Array[Array[Long]]]()
+  private[graft] val FitFixed = Kind("kmeans-fit-fixed", Model, "embeddings")
 
   /** Fixed-point Lloyd's fit: same init (k lowest vec_ids), same
     * tie-break (lower cid), same empty-cluster rule (carry the previous
     * centroid) as the double loop — but exact at every step. */
   def fitFixed(spark: SparkSession, dir: String, iters: Int = Iters,
                k: Int = K): Array[Array[Long]] =
-    fitFixedCache.getOrElseUpdate((dir, iters, k, graft.Fs.tableFingerprint(dir, "embeddings")),
-      fitFixed(qvecs(spark, dir), iters, k))
+    Artifacts.memo(FitFixed, dir, iters, k)(fitFixed(qvecs(spark, dir), iters, k))
 
   /** df form: expects (vec_id: Long, e: Array[Long] micro-units); not
     * memoized. Also the IVF coarse-quantizer fit (`Similarity`), where
@@ -359,13 +352,11 @@ object Clustering {
   /** Power-iteration rounds (same count as the Lloyd loop). */
   val PcaIters = 8
 
-  private val pcaCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, String), Array[Long]]()
+  private[graft] val Pca = Kind("pca", Model, "embeddings")
 
   def pcaPowerFixed(spark: SparkSession, dir: String,
                     iters: Int = PcaIters): Array[Long] =
-    pcaCache.getOrElseUpdate((dir, iters, graft.Fs.tableFingerprint(dir, "embeddings")),
-      pcaPowerFixed(qvecs(spark, dir), iters))
+    Artifacts.memo(Pca, dir, iters)(pcaPowerFixed(qvecs(spark, dir), iters))
 
   /** df form: expects (vec_id, e: Array[Long] micro-units). Driver
     * state is ONE 64-long vector per round. */
@@ -460,14 +451,12 @@ object Clustering {
       }: _*).as("e"))
   }
 
-  private val pcaDeflateCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, String), Array[Long]]()
+  private[graft] val PcaDeflate = Kind("pca-deflate", Model, "embeddings")
 
   def pcaDeflateFixed(spark: SparkSession, dir: String,
                       iters: Int = PcaIters): Array[Long] =
-    pcaDeflateCache.getOrElseUpdate((dir, iters, graft.Fs.tableFingerprint(dir, "embeddings")),
-      pcaPowerFixed(pcaDeflatedVecs(qvecs(spark, dir),
-        pcaPowerFixed(spark, dir, iters)), iters))
+    Artifacts.memo(PcaDeflate, dir, iters)(pcaPowerFixed(
+      pcaDeflatedVecs(qvecs(spark, dir), pcaPowerFixed(spark, dir, iters)), iters))
 
   /** q_pca_deflate: the second principal direction as (dim, c) rows —
     * same 64-row artifact shape as [[pcaPower]]. */
@@ -482,8 +471,7 @@ object Clustering {
   /** Components returned by [[pcaTopK]]. */
   val PcaK = 3
 
-  private val pcaTopKCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, Int, String), Array[Array[Long]]]()
+  private[graft] val PcaTopK = Kind("pca-topk", Model, "embeddings")
 
   /** q_pca_topk: the deflation step LOOPED — the top-k principal
     * directions by chain → deflate → chain → deflate → chain. Each
@@ -497,7 +485,7 @@ object Clustering {
     * bounded multi-component model artifact. */
   def pcaTopKFixed(spark: SparkSession, dir: String, k: Int = PcaK,
                    iters: Int = PcaIters): Array[Array[Long]] =
-    pcaTopKCache.getOrElseUpdate((dir, k, iters, graft.Fs.tableFingerprint(dir, "embeddings")), {
+    Artifacts.memo(PcaTopK, dir, k, iters) {
       val comps = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
       var vs = qvecs(spark, dir)
       for (c <- 0 until k) {
@@ -506,7 +494,7 @@ object Clustering {
         if (c < k - 1) vs = pcaDeflatedVecs(vs, cc)
       }
       comps.toArray
-    })
+    }
 
   def pcaTopK(spark: SparkSession, dir: String): DataFrame = {
     val cs = pcaTopKFixed(spark, dir)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.sources.Tables
+import Artifacts.{Index, Kind}
 
 /** Deduplication suite over `documents` / `embeddings` (SURVEY §2
   * B18–B19 + north-star: exact, n-gram Jaccard, MinHash+LSH, SimHash,
@@ -794,13 +795,10 @@ object Dedup {
     * cached blocks, not the propagation loop. Session-scoped (the
     * backing blocks die with the SparkContext); cleared by the bench
     * between timed runs. */
-  private val compCache =
-    new scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
-
-  def clearComponentCache(): Unit = compCache.clear()
+  private[graft] val Components = Kind("dupcomp", Index, "documents")
 
   def dupComponents(spark: SparkSession, dir: String): DataFrame =
-    compCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "documents")),
+    Artifacts.memo(Components, dir)(
       dupComponents(minhashLsh(Tables(spark, dir, "documents"))))
 
   // ---- incremental dedup of an appended batch (VERDICT r6 #5): the
@@ -832,10 +830,7 @@ object Dedup {
   // shingles), so per-batch verify cost is |candidate docs|-bound —
   // the append path never re-shingles the corpus (VERDICT r7 #1).
 
-  private val bandIdxCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long, Long)]()
-
-  def clearBandIndexCache(): Unit = bandIdxCache.clear()
+  private[graft] val BandIndex = Kind("bandidx", Index, "documents")
 
   /** Staged base-corpus band index + SHINGLE index + verified base pair
     * list, memoized per (dir, data fingerprint); returns (root, cut,
@@ -847,8 +842,8 @@ object Dedup {
     * range-layout on doc_id gives every file/row-group tight min/max
     * stats, so at 100 TB the candidate semi-join reads only the index
     * slices holding candidate docs. */
-  private[graft] def stagedBandIndex(spark: SparkSession, dir: String): (String, Long, Long) =
-    bandIdxCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "documents")), {
+  private[graft] def stagedBandIndex(spark: SparkSession, dir: String): (String, Long, Long) = {
+    val (root, (cut, deltaDocs)) = Artifacts.staged(BandIndex, dir) { root =>
       val docs = Tables(spark, dir, "documents")
       val n = docs.count()
       val cut = n - math.max(1L, n / 10)
@@ -858,7 +853,6 @@ object Dedup {
       // (the Similarity.stagedAppendedIndex refresh-fraction fix, same
       // class); counted once here, carried in the staging metadata
       val baseRows = base.count()
-      val root = graft.Engine.workDir("graft-bandidx-").getAbsolutePath
       // three independent artifact writes — overlap them (guide §2.6)
       // so each job's task tail back-fills the others' idle cores;
       // dedicated drained pool per [[Staging.JobPool]]
@@ -879,8 +873,10 @@ object Dedup {
           pool.await()
         } finally pool.drainQuiet()
       }
-      (root, cut, n - baseRows)
-    })
+      (cut, n - baseRows)
+    }
+    (root, cut, deltaDocs)
+  }
 
   /** The batch probe: verified new pairs (delta×base ∪ delta×delta)
     * from the persisted band index — the plan the scale argument is

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import Artifacts.{Index, Kind}
 
 /** The co-purchase graph as an INDEX-CLASS staged artifact (VERDICT
   * r12 #1): every projection of the lineitem fact table that the
@@ -96,14 +97,11 @@ object GraphIndex {
     * parallelism of every iterative serve). */
   val GraphBuckets = 32
 
-  private val cache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Unit)]()
-
-  def clearGraphCache(): Unit = cache.clear()
+  private[graft] val Graph = Kind("graph", Index, "lineitem")
 
   /** Build (or reuse) the staged graph artifact; returns its root. */
   private[graft] def stagedGraph(spark: SparkSession, dir: String): String = {
-    val (root, _) = Staging.stage(cache, dir, "lineitem", "graft-graph-") { root =>
+    val (root, _) = Artifacts.staged(Graph, dir) { root =>
       val li = Tables(spark, dir, "lineitem")
 
       // order→part distinct: basket grain, and the projection input
@@ -201,7 +199,7 @@ object GraphIndex {
           bucketWrite(
             enc.select(col("cu").as("src"), col("cv").as("dst"))
               .unionAll(enc.select(col("cv").as("src"), col("cu").as("dst"))),
-            root, "proja")
+            root.getPath, "proja")
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(s"$root/proja/_graft_schema"),
             s"src $sqlT, dst $sqlT")
@@ -233,7 +231,7 @@ object GraphIndex {
               .unionAll(proj.select(col("v").as("src"), col("u").as("dst")))
               .groupBy("src")
               .agg(sort_array(collect_list(col("dst"))).as("ns")),
-            root, "projadj")
+            root.getPath, "projadj")
         }
         // part↔supplier bipartite graph, both directions, distinct —
         // built on THIS thread (two dependents below), overlapping the
@@ -251,7 +249,7 @@ object GraphIndex {
           // bucketed by src so serves skip the per-query |E| re-staging
           bucketWrite(
             bip.join(bip.groupBy("src").agg(count(lit(1)).as("d")), "src"),
-            root, "bipd")
+            root.getPath, "bipd")
         }
         pool.submit {
           // the uniform random-walk trajectory corpus over the

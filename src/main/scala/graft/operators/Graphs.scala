@@ -912,9 +912,8 @@ object Graphs {
 
   /** Round core over a src-laid-out both-direction adjacency (bucketed
     * artifact scan from the catalog, cut repartition from the df
-    * form). `private[graft]` so the graph_enc probe can drive the SAME
-    * core over a dictionary-encoded adjacency (VERDICT r14 #3). */
-  private[graft] def labelPropAdj(adj: DataFrame, rounds: Int): DataFrame = {
+    * form). */
+  private def labelPropAdj(adj: DataFrame, rounds: Int): DataFrame = {
     var labels = graft.Engine.cut(
       adj.select(col("src").as("node")).distinct()
         .withColumn("lbl", col("node")))
@@ -1055,9 +1054,8 @@ object Graphs {
 
   /** Peel core over a src-laid-out both-direction adjacency (bucketed
     * artifact scan from the catalog, cut repartition from the df
-    * form). `private[graft]` so the graph_enc probe can drive the SAME
-    * core over a dictionary-encoded adjacency (VERDICT r14 #3). */
-  private[graft] def kcoreAdj(adjIn: DataFrame, rounds: Int, k: Int): DataFrame = {
+    * form). */
+  private def kcoreAdj(adjIn: DataFrame, rounds: Int, k: Int): DataFrame = {
     var adj = adjIn
     var realized = 0
     var converged = false

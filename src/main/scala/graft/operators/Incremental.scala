@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import Artifacts.{Index, Kind}
 
 /** Incremental aggregate maintenance (q_incr_agg): a persisted
   * partial-aggregate state merged with an append batch — the
@@ -40,10 +41,7 @@ object Incremental {
     * expressed in event time as a warehouse rollup would). */
   val DeltaDays = 90
 
-  private val stateCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, java.sql.Timestamp)]()
-
-  def clearAggStateCache(): Unit = stateCache.clear()
+  private[graft] val AggState = Kind("aggstate", Index, "orders")
 
   /** The shared event-time cut over orders (max date − [[DeltaDays]]) —
     * stagedAggState, stagedTopkState and Relational.mergeUpsert must
@@ -58,12 +56,6 @@ object Incremental {
     org.apache.spark.sql.functions.udaf(
       new graft.functions.TopKByScore(k),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
-
-  private def allCaches: Seq[scala.collection.concurrent.TrieMap[_, _]] =
-    Seq(stateCache, wcCache, idxCache, hllCache, topkCache, joinCache)
-
-  /** Clear every incremental state memo (bench rerun honesty). */
-  def clearAllStateCaches(): Unit = allCaches.foreach(_.clear())
 
   /** Monthly (month, o_orderstatus) partials over `df`: exact cent
     * sums + counts. ONE definition feeds state staging, the delta
@@ -83,7 +75,7 @@ object Incremental {
     * exactly the index-staging contract of the other incremental
     * operators. */
   private[graft] def stagedAggState(spark: SparkSession, dir: String): (String, java.sql.Timestamp) =
-    Staging.stage(stateCache, dir, "orders", "graft-aggstate-") { root =>
+    Artifacts.staged(AggState, dir) { root =>
       val cut = ordersCut(spark, dir)
       partials(Tables(spark, dir, "orders").where(col("o_orderdate") < lit(cut)))
         .write.mode("overwrite").parquet(s"$root/state")
@@ -129,10 +121,7 @@ object Incremental {
   // appended docs' counts into persisted state. Same arrival cut as
   // the dedup/ANN incrementals (last ~10% of doc ids arrive late).
 
-  private val wcCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
-  def clearWordStateCache(): Unit = wcCache.clear()
+  private[graft] val WordState = Kind("wcstate", Index, "documents")
 
   /** Word-count partials: q_wordcount's own aggregation body (shared
     * definition — TextOps.wordCountPartials — so the tokenizer cannot
@@ -143,7 +132,7 @@ object Incremental {
   /** Staged word-count state over the base docs (doc_id < cut),
     * memoized per (dir, data fingerprint); returns (root, cut). */
   private[graft] def stagedWordState(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(wcCache, dir, "documents", "graft-wcstate-") { root =>
+    Artifacts.staged(WordState, dir) { root =>
       val docs = Tables(spark, dir, "documents")
       val n = docs.count()
       val cut = n - math.max(1L, n / 10)
@@ -177,15 +166,12 @@ object Incremental {
   // a vocabulary-grain merge. At 100 TB: the index never rebuilds; a
   // crawl increment costs its own size.
 
-  private val idxCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
-  def clearIndexStateCache(): Unit = idxCache.clear()
+  private[graft] val IndexState = Kind("idxstate", Index, "documents")
 
   /** Staged per-term index partials over the base docs (doc_id < cut),
     * memoized per (dir, data fingerprint); returns (root, cut). */
   private[graft] def stagedIndexState(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(idxCache, dir, "documents", "graft-idxstate-") { root =>
+    Artifacts.staged(IndexState, dir) { root =>
       val docs = Tables(spark, dir, "documents")
       val n = docs.count()
       val cut = n - math.max(1L, n / 10)
@@ -244,10 +230,7 @@ object Incremental {
   // At 100 TB: a month's billions of orders never re-rank; a batch
   // costs its own scan + a groups-sized merge.
 
-  private val topkCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, java.sql.Timestamp)]()
-
-  def clearTopkStateCache(): Unit = topkCache.clear()
+  private[graft] val TopkState = Kind("topkstate", Index, "orders")
 
   /** Per-month capped top-k partials over `df` — q_group_topk's
     * aggregation body (same aggregator, same k), minus the explode. */
@@ -258,7 +241,7 @@ object Incremental {
   /** Staged top-k state over the base orders slice (same DeltaDays
     * event-time cut as the rollup state — [[ordersCut]]). */
   private[graft] def stagedTopkState(spark: SparkSession, dir: String): (String, java.sql.Timestamp) =
-    Staging.stage(topkCache, dir, "orders", "graft-topkstate-") { root =>
+    Artifacts.staged(TopkState, dir) { root =>
       val cut = ordersCut(spark, dir)
       topkPartials(Tables(spark, dir, "orders")
           .where(col("o_orderdate") < lit(cut)), TopkK)
@@ -301,17 +284,14 @@ object Incremental {
   // This is the 100 TB maintenance story for distinct counts: the
   // state is groups × 256 small ints at any corpus size.
 
-  private val hllCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
-  def clearHllStateCache(): Unit = hllCache.clear()
+  private[graft] val HllState = Kind("hllstate", Index, "lineitem")
 
   /** Staged HLL register state over the base slice (l_orderkey below
     * the top-decile cut — the key-space arrival convention of the doc
     * incrementals, expressed on the lineitem fact), memoized per
     * (dir, data fingerprint); returns (root, cut). */
   private[graft] def stagedHllState(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(hllCache, dir, "lineitem", "graft-hllstate-") { root =>
+    Artifacts.staged(HllState, dir) { root =>
       val li = Tables(spark, dir, "lineitem")
       val maxKey = li.agg(max("l_orderkey")).head().getLong(0) // 1 driver row
       val cut = maxKey - math.max(1L, maxKey / 10)
@@ -363,10 +343,7 @@ object Incremental {
   // terms are non-empty and none can be elided by an arrival
   // convention.
 
-  private val joinCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, (java.sql.Timestamp, java.sql.Timestamp))]()
-
-  def clearJoinStateCache(): Unit = joinCache.clear()
+  private[graft] val JoinState = Kind("joinstate", Index, "orders", "lineitem")
 
   /** Monthly revenue partials over any (orders-slice ⋈ lineitem-slice):
     * exact revenue cents per line (the pinned
@@ -400,7 +377,7 @@ object Incremental {
     * before their cuts) — the one full join, paid once per corpus
     * version. */
   private[graft] def stagedJoinState(spark: SparkSession, dir: String): (String, (java.sql.Timestamp, java.sql.Timestamp)) =
-    Staging.stage(joinCache, dir, "orders", "graft-joinstate-") { root =>
+    Artifacts.staged(JoinState, dir) { root =>
       val cutO = Relational.ordersDeltaCut(spark, dir)
       val cutL = lineitemDeltaCut(spark, dir)
       val baseO = ordCols(Tables(spark, dir, "orders")

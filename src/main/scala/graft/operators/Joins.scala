@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.sources.Tables
+import Artifacts.{Input, Kind}
 
 /** Join surface (SURVEY §2 B7–B10 + as-of).
   *
@@ -312,8 +313,7 @@ object Joins {
       .select(col("id"), coalesce(col("comp"), col("id")).as("canon"))
   }
 
-  private val bucketCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, String)]()
+  private[graft] val Buckets = Kind("bkt", Input, "orders", "customer")
 
   /** Bucket count for the staged co-located join tables. Local default
     * 8 (env SPARK_GRAFT_BUCKETS); at 100 TB size so one bucket ≈ one
@@ -329,32 +329,27 @@ object Joins {
     * c_custkey (`bucketCount` buckets) as catalog tables; memoized per
     * (dir, data fingerprint of BOTH staged tables — fingerprinting only
     * one would serve a stale copy of the other after an in-place
-    * regen). */
-  private[graft] def stagedBuckets(spark: SparkSession, dir: String): (String, String) = {
-    val fp = graft.Fs.tableFingerprint(dir, "orders") + "|" +
-      graft.Fs.tableFingerprint(dir, "customer")
-    bucketCache.getOrElseUpdate((dir, fp), {
-      val tag = Integer.toHexString((dir + fp).hashCode)
-      val root = graft.Engine.workDir("graft-bkt-")
+    * regen). Table names carry the build's root, so a rebuild never
+    * collides with a table left over from an earlier one. */
+  private[graft] def stagedBuckets(spark: SparkSession, dir: String): (String, String) =
+    Artifacts.staged(Buckets, dir) { root =>
+      val tag = root.getName.replaceAll("[^A-Za-z0-9]", "_")
       def stage(table: String, cols: Seq[String], key: String): String = {
-        val name = s"graft_${table}_b$tag"
-        if (!spark.catalog.tableExists(name)) {
-          // repartition on the bucket key first (same Murmur3 mapping as
-          // the bucket spec) → exactly ONE file per bucket; Spark only
-          // propagates the sortBy ordering (eliding the join's Sort) for
-          // single-file buckets
-          Tables(spark, dir, table).select(cols.map(col): _*)
-            .repartition(bucketCount, col(key))
-            .write.bucketBy(bucketCount, key).sortBy(key)
-            .option("path", new java.io.File(root, name).getAbsolutePath)
-            .mode("overwrite").saveAsTable(name)
-        }
+        val name = s"graft_${table}_$tag"
+        // repartition on the bucket key first (same Murmur3 mapping as
+        // the bucket spec) → exactly ONE file per bucket; Spark only
+        // propagates the sortBy ordering (eliding the join's Sort) for
+        // single-file buckets
+        Tables(spark, dir, table).select(cols.map(col): _*)
+          .repartition(bucketCount, col(key))
+          .write.bucketBy(bucketCount, key).sortBy(key)
+          .option("path", new java.io.File(root, name).getAbsolutePath)
+          .mode("overwrite").saveAsTable(name)
         name
       }
       (stage("orders", Seq("o_orderkey", "o_custkey", "o_totalprice"), "o_custkey"),
         stage("customer", Seq("c_custkey", "c_mktsegment"), "c_custkey"))
-    })
-  }
+    }._2
 
   /** As-of join (q_join_asof): for each event, the most recent order of
     * the same customer at-or-before the event time.

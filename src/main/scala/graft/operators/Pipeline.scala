@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import Artifacts.{Index, Kind}
 
 /** End-to-end training-data curation (the north-star composition):
   *
@@ -714,10 +715,7 @@ object Pipeline {
   // base ∪ delta (spec-asserted; the oracle is webOracle verbatim —
   // the q_dedup_append convention).
 
-  private val webStateCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, (Long, Long))]()
-
-  def clearWebStateCache(): Unit = webStateCache.clear()
+  private[graft] val WebState = Kind("webstate", Index, "documents")
 
   /** The increment predicate: the latest crawl = the last
     * [[graft.sources.WebCorpus.DeltaSliceStart]]-onward web pages plus
@@ -734,7 +732,7 @@ object Pipeline {
   private[graft] def stagedWebState(spark: SparkSession,
       dir: String): (String, Long, Long) = {
     val (root, (fixtureCut, deltaDocs)) =
-      Staging.stage(webStateCache, dir, "documents", "graft-webstate-") { root =>
+      Artifacts.staged(WebState, dir) { root =>
         val corpus = graft.sources.WebCorpus.enriched(
           Tables(spark, dir, "documents"))
         val nFix = corpus

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import Artifacts.{Index, Kind, Model}
 
 /** Fixed-point LINEAR REGRESSION via sufficient statistics — the
   * classic "supervised learning as one aggregation" shape (Dean &
@@ -49,16 +50,12 @@ object Regression {
   private def roundDivB(s: BigInt, n: BigInt): BigInt =
     if (s >= 0) (2 * s + n) / (2 * n) else -((2 * -s + n) / (2 * n))
 
-  private val fitCache =
-    new scala.collection.concurrent.TrieMap[(String, String), Array[Long]]()
-
-  def clearFitCache(): Unit = fitCache.clear()
+  private[graft] val Fit = Kind("linreg-fit", Model, "documents")
 
   /** The fit: one aggregation pass → BigInt Cramer solve → 3 exact
     * micro-unit coefficients (β₀ + β₁·x1 + β₂·x2). */
   def fitFixed(spark: SparkSession, dir: String): Array[Long] =
-    fitCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "documents")),
-      fitFixed(feats(Tables(spark, dir, "documents"))))
+    Artifacts.memo(Fit, dir)(fitFixed(feats(Tables(spark, dir, "documents"))))
 
   /** The 9 normal-equation sums as one aggregated row — the
     * SUFFICIENT STATISTICS of the fit, and the whole reason the
@@ -142,15 +139,12 @@ object Regression {
   // have, and it is exactly why large-scale pipelines keep linear
   // models' XᵀX/Xᵀy around instead of the fitted coefficients alone.
 
-  private val stateCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
-  def clearLinregStateCache(): Unit = stateCache.clear()
+  private[graft] val SumsState = Kind("linregstate", Index, "documents")
 
   /** Base-slice sufficient statistics staged as a 1-row parquet;
     * returns (root, id cutoff). */
   private[graft] def stagedSumsState(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(stateCache, dir, "documents", "graft-linregstate-") { root =>
+    Artifacts.staged(SumsState, dir) { root =>
       val docs = Tables(spark, dir, "documents")
       val n = docs.count()
       val cut = n - math.max(1L, n / 10)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.sources.Tables
+import Artifacts.{Index, Kind, Model}
 
 /** Text-analysis operators over the `documents` table (SURVEY §2 B3, B15,
   * B22 + north-star text ops: language-ID, quality scoring, token
@@ -1088,18 +1089,13 @@ object TextOps {
     * iterative part). Deterministic per (dir, nMerges, data
     * fingerprint) → safe to memoize, same pattern as Clustering's fit
     * cache; cleared by the bench between timed runs. */
-  private val mergeCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, String), Seq[(String, String)]]()
-
-  def clearMergeCache(): Unit = mergeCache.clear()
+  private[graft] val BpeMerges = Kind("bpe-merges", Model, "documents")
 
   def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    val merges = mergeCache.getOrElseUpdate(
-      (dir, 8, graft.Fs.tableFingerprint(dir, "documents")), {
-        val docs = Tables(spark, dir, "documents")
-        bpeLearn(spark, docs, 8).orderBy("rank").collect()
-          .map(r => (r.getString(1), r.getString(2))).toSeq
-      })
+    val merges = Artifacts.memo(BpeMerges, dir, 8) {
+      bpeLearn(spark, Tables(spark, dir, "documents"), 8).orderBy("rank").collect()
+        .map(r => (r.getString(1), r.getString(2))).toSeq
+    }
     bpeEncode(spark, Tables(spark, dir, "documents"), merges)
   }
 
@@ -1316,40 +1312,36 @@ object TextOps {
   // appended-index serves are bit-identical to live runs — no
   // frozen-model caveat.
 
-  private val winnowIndexCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-  private val winnowAppendCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-  def clearWinnowIndexCache(): Unit = winnowIndexCache.clear()
-  def clearWinnowAppendCache(): Unit = winnowAppendCache.clear()
+  private[graft] val WinnowIndex = Kind("winnowidx", Index, "documents")
+  private[graft] val WinnowAppend = Kind("winnowinc", Index, "documents")
 
   private def winnowIndexRows(docs: DataFrame): DataFrame =
     winnowDecoded(docs)
       .withColumn("fgrp", pmod(col("fp"), lit(64L)))
 
   private[graft] def stagedWinnowIndex(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(winnowIndexCache, dir, "documents", "graft-winnowidx-") { root =>
+    Artifacts.staged(WinnowIndex, dir) { root =>
       graft.sources.Sinks.writePartitioned(
         winnowIndexRows(Tables(spark, dir, "documents")),
-        root, Seq("fgrp"), Seq("fp", "doc_id"))
-      spark.read.parquet(root).count()
+        root.getPath, Seq("fgrp"), Seq("fp", "doc_id"))
+      spark.read.parquet(root.getPath).count()
     }
 
   /** Base staged once, the late decile's selection rows appended into
     * the same fgrp dirs (per-doc pure function ⇒ row sets equal the
     * one-shot artifact's). */
   private[graft] def stagedAppendedWinnowIndex(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(winnowAppendCache, dir, "documents", "graft-winnowinc-") { root =>
+    Artifacts.staged(WinnowAppend, dir) { root =>
       val docs = Tables(spark, dir, "documents")
       val n = docs.count()
       val cut = n - math.max(1L, n / 10)
       graft.sources.Sinks.writePartitioned(
         winnowIndexRows(docs.where(col("doc_id") < cut)),
-        root, Seq("fgrp"), Seq("fp", "doc_id"))
+        root.getPath, Seq("fgrp"), Seq("fp", "doc_id"))
       graft.sources.Sinks.appendPartitioned(
         winnowIndexRows(docs.where(col("doc_id") >= cut)),
-        root, Seq("fgrp"), Seq("fp", "doc_id"))
-      spark.read.parquet(root).count()
+        root.getPath, Seq("fgrp"), Seq("fp", "doc_id"))
+      spark.read.parquet(root.getPath).count()
     }
 
   /** North-star q_winnow_dups_indexed: dup pairs served from the
@@ -1367,9 +1359,7 @@ object TextOps {
     winnowDupsBody(spark.read.parquet(root))
   }
 
-  private val docCharLenCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Unit)]()
-  def clearDocCharLenCache(): Unit = docCharLenCache.clear()
+  private[graft] val DocCharLens = Kind("doccharlen", Index, "documents")
 
   /** Per-doc codepoint lengths (doc_id, n) staged once beside the
     * winnow artifact — the only piece of [[winnowStats]] the selection
@@ -1378,7 +1368,7 @@ object TextOps {
     * like every other staged artifact. (Distinct from the BM25
     * [[stagedDocLens]] sidecar, whose dl is a TOKEN total.) */
   private[graft] def stagedDocCharLens(spark: SparkSession, dir: String): String = {
-    val (root, _) = Staging.stage(docCharLenCache, dir, "documents", "graft-doccharlen-") { root =>
+    val (root, _) = Artifacts.staged(DocCharLens, dir) { root =>
       Tables(spark, dir, "documents")
         .select(col("doc_id"),
           length(lower(col("text"))).cast(LongType).as("n"))
@@ -1632,10 +1622,7 @@ object TextOps {
   val PostingsBuckets = 64
   val LookupTerms: (String, String) = ("scan", "merge")
 
-  private val postCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
-  def clearPostingsCache(): Unit = postCache.clear()
+  private[graft] val Postings = Kind("postings", Index, "documents")
 
   /** Staged FULL postings index: (word, doc_id, tf) hash-bucketed by
     * term into [[PostingsBuckets]] directory partitions and sorted by
@@ -1658,10 +1645,10 @@ object TextOps {
     * work, and the (word, doc_id) layout would rest on that sort's
     * stability); one bucket-led sort gives the guaranteed layout. */
   private[graft] def stagedPostings(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(postCache, dir, "documents", "graft-postings-") { root =>
+    Artifacts.staged(Postings, dir) { root =>
       val docs = Tables(spark, dir, "documents")
       val nDocs = docs.count()
-      writePostings(docs, root, "overwrite")
+      writePostings(docs, root.getPath, "overwrite")
       nDocs
     }
 
@@ -1706,10 +1693,7 @@ object TextOps {
       t1: String, t2: String): DataFrame =
     lookupFrom(spark, path, t1, t2)
 
-  private val postAppendCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
-  def clearPostingsAppendCache(): Unit = postAppendCache.clear()
+  private[graft] val PostingsAppend = Kind("postappend", Index, "documents")
 
   /** Postings artifact built as base + APPENDED crawl increment: the
     * base slice (doc_id < cut) is staged once, then the delta slice is
@@ -1723,12 +1707,12 @@ object TextOps {
     * oracle. (Row-group word-sort pruning holds per file; the delta
     * files are sorted the same way.) */
   private[graft] def stagedAppendedPostings(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(postAppendCache, dir, "documents", "graft-postappend-") { root =>
+    Artifacts.staged(PostingsAppend, dir) { root =>
       val docs = Tables(spark, dir, "documents")
       val n = docs.count()
       val cut = n - math.max(1L, n / 10)
-      writePostings(docs.where(col("doc_id") < cut), root, "overwrite")
-      writePostings(docs.where(col("doc_id") >= cut), root, "append")
+      writePostings(docs.where(col("doc_id") < cut), root.getPath, "overwrite")
+      writePostings(docs.where(col("doc_id") >= cut), root.getPath, "append")
       n
     }
 
@@ -1808,10 +1792,7 @@ object TextOps {
   /** Result size for [[indexSearch]]'s catalog row. */
   val SearchK = 25
 
-  private val docLenCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
-  def clearDocLenCache(): Unit = docLenCache.clear()
+  private[graft] val DocLens = Kind("doclens", Index, "documents")
 
   /** Doc-length sidecar for [[bm25]]: (doc_id, dl) with dl ≡ Σ tf per
     * doc, staged beside the index with the corpus token total T. One
@@ -1824,13 +1805,13 @@ object TextOps {
     * tokenizer drift between postings and dl impossible by
     * construction. */
   private[graft] def stagedDocLens(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(docLenCache, dir, "documents", "graft-doclens-") { root =>
+    Artifacts.staged(DocLens, dir) { root =>
       val (postRoot, nDocs) = stagedPostings(spark, dir)
       spark.read.parquet(postRoot)
         .groupBy("doc_id").agg(sum("tf").as("dl"))
         .repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(root)
-      val r = spark.read.parquet(root)
+        .write.mode("overwrite").parquet(root.getPath)
+      val r = spark.read.parquet(root.getPath)
         .agg(sum("dl"), max("dl")).head()
       requireBm25Safe(nDocs, r.getLong(0), r.getLong(1))
       r.getLong(0)
@@ -1952,10 +1933,7 @@ object TextOps {
       LookupTerms._1, LookupTerms._2, SearchK)
   }
 
-  private val docLenAppendCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
-  def clearDocLenAppendCache(): Unit = docLenAppendCache.clear()
+  private[graft] val DocLensAppend = Kind("dlappend", Index, "documents")
 
   /** The dl sidecar maintained base + append (disjoint doc slices →
     * disjoint exact dl rows; same cut as the postings append). Each
@@ -1963,17 +1941,17 @@ object TextOps {
     * tokenization path the postings artifact itself uses, so the two
     * appended artifacts cannot disagree on a token. */
   private[graft] def stagedAppendedDocLens(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(docLenAppendCache, dir, "documents", "graft-dlappend-") { root =>
+    Artifacts.staged(DocLensAppend, dir) { root =>
       val docs = Tables(spark, dir, "documents")
       val n = docs.count()
       val cut = n - math.max(1L, n / 10)
       def dls(slice: DataFrame): DataFrame =
         postingRows(slice).groupBy("doc_id").agg(sum("tf").as("dl"))
       dls(docs.where(col("doc_id") < cut))
-        .write.mode("overwrite").parquet(root)
+        .write.mode("overwrite").parquet(root.getPath)
       dls(docs.where(col("doc_id") >= cut))
-        .write.mode("append").parquet(root)
-      val r = spark.read.parquet(root)
+        .write.mode("append").parquet(root.getPath)
+      val r = spark.read.parquet(root.getPath)
         .agg(sum("dl"), max("dl")).head()
       requireBm25Safe(n, r.getLong(0), r.getLong(1))
       r.getLong(0)

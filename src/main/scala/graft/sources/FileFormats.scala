@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.Artifacts
 
 /** Non-parquet source formats: line-oriented text, CSV, JSON.
   *
@@ -29,16 +30,15 @@ import org.apache.spark.sql.types._
   */
 object FileFormats {
 
-  private[graft] val stageCache =
-    new scala.collection.concurrent.TrieMap[(String, String, String), String]()
-
+  /** Memoized copy of `table` in format `fmt`, written by `write` into
+    * a directory it creates; returns that directory's path. */
   private def staged(dir: String, table: String, fmt: String)
                     (write: java.io.File => Unit): String =
-    stageCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, table), fmt), {
-      val root = new java.io.File(graft.Engine.workDir(s"graft-$fmt-"), s"${table}_$fmt")
-      write(root)
-      root.getAbsolutePath
-    })
+    Artifacts.staged(Artifacts.Kind(fmt, Artifacts.Input, table), dir) { root =>
+      val out = new java.io.File(root, s"${table}_$fmt")
+      write(out)
+      out.getAbsolutePath
+    }._2
 
   /** q_source_text: the reference's flagship workload on the reference's
     * native format — word count over LINE-ORIENTED TEXT FILES

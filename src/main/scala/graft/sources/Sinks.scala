@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Artifacts
+import graft.operators.Artifacts.{Input, Kind}
 
 /** Write-path layout control (SURVEY §2 A7 generalized to the 100 TB
   * design point). The reference's sink is one text file per reducer
@@ -51,22 +53,32 @@ object Sinks {
       .partitionBy(partitionCols: _*)
       .parquet(path)
 
-  /** Memoized staged layouts, keyed (kind, sf-dir, data fingerprint). */
-  private val partCache =
-    new scala.collection.concurrent.TrieMap[(String, String, String), String]()
+  private[graft] val MonthlyOrders = Kind("part", Input, "orders")
+  private[graft] val ZOrdered = Kind("zorder", Input, "lineitem")
+  private[graft] val ZOptimized = Kind("zoptimize", Input, "lineitem")
+  private[graft] val Republished = Kind("republish", Input, "orders")
+  private[graft] val Compacted = Kind("compact", Input, "documents")
+
+  /** Memoized staged layout: `write` fills the directory `name` inside a
+    * fresh root (the optimize/compact swaps need sibling paths beside
+    * it); returns that directory's path. */
+  private def stagedLayout(kind: Kind, dir: String, name: String)(write: String => Unit): String =
+    Artifacts.staged(kind, dir) { root =>
+      val path = new java.io.File(root, name).getAbsolutePath
+      write(path)
+      path
+    }._2
 
   /** Stage a month-partitioned copy of `orders` (directory layout
     * `o_month=yyyy-MM/`, rows sorted by o_orderkey within files) via
     * `writePartitioned`; memoized per (dir, data fingerprint). */
   private[graft] def stagedMonthlyOrders(spark: SparkSession, dir: String): String =
-    partCache.getOrElseUpdate(("monthly", dir, graft.Fs.tableFingerprint(dir, "orders")), {
-      val root = new java.io.File(graft.Engine.workDir("graft-part-"), "orders_monthly")
+    stagedLayout(MonthlyOrders, dir, "orders_monthly") { path =>
       writePartitioned(
         graft.sources.Tables(spark, dir, "orders")
           .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM")),
-        root.getAbsolutePath, Seq("o_month"), Seq("o_orderkey"))
-      root.getAbsolutePath
-    })
+        path, Seq("o_month"), Seq("o_orderkey"))
+    }
 
   /** q_partition_prune: one month of orders read back from the
     * partitioned layout. The month predicate is a PARTITION filter — at
@@ -173,14 +185,12 @@ object Sinks {
         col("l_partkey"), col("l_quantity"))
 
   private[graft] def stagedZOrderedLineitem(spark: SparkSession, dir: String): String =
-    partCache.getOrElseUpdate(("zorder", dir, graft.Fs.tableFingerprint(dir, "lineitem")), {
-      val root = new java.io.File(graft.Engine.workDir("graft-zorder-"), "lineitem_z")
+    stagedLayout(ZOrdered, dir, "lineitem_z") { path =>
       writeZOrdered(
         graft.sources.Tables(spark, dir, "lineitem")
           .select("l_orderkey", "l_linenumber", "l_suppkey", "l_partkey", "l_quantity"),
-        root.getAbsolutePath, "l_suppkey", "l_partkey", numFiles = 16)
-      root.getAbsolutePath
-    })
+        path, "l_suppkey", "l_partkey", numFiles = 16)
+    }
 
   /** Build a z-ordered artifact that then ACCEPTED a raw append: the
     * base slice (l_orderkey below the top-decile cut) is clustered,
@@ -231,12 +241,10 @@ object Sinks {
         col("l_partkey"), col("l_quantity"))
 
   private[graft] def stagedOptimizedLineitem(spark: SparkSession, dir: String): String =
-    partCache.getOrElseUpdate(("zoptimize", dir, graft.Fs.tableFingerprint(dir, "lineitem")), {
-      val root = new java.io.File(graft.Engine.workDir("graft-zoptimize-"), "lineitem_zo")
-      buildAppendedZ(spark, dir, root.getAbsolutePath)
-      optimizeZOrdered(spark, root.getAbsolutePath, "l_suppkey", "l_partkey", 16)
-      root.getAbsolutePath
-    })
+    stagedLayout(ZOptimized, dir, "lineitem_zo") { path =>
+      buildAppendedZ(spark, dir, path)
+      optimizeZOrdered(spark, path, "l_suppkey", "l_partkey", 16)
+    }
 
   /** Small-file compaction: rewrite a parquet directory into
     * ~`targetBytes`-sized files (computed from the CURRENT on-disk
@@ -358,9 +366,7 @@ object Sinks {
         round(sum("o_totalprice"), 2).as("sum_price"))
 
   private[graft] def stagedRepublishedOrders(spark: SparkSession, dir: String): String =
-    partCache.getOrElseUpdate(("republish", dir, graft.Fs.tableFingerprint(dir, "orders")), {
-      val root = new java.io.File(graft.Engine.workDir("graft-republish-"), "orders_rp")
-      val path = root.getAbsolutePath
+    stagedLayout(Republished, dir, "orders_rp") { path =>
       val withMonth = graft.sources.Tables(spark, dir, "orders")
         .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
       writePartitioned(withMonth, path, Seq("o_month"), Seq("o_orderkey"))
@@ -368,8 +374,7 @@ object Sinks {
         withMonth.where(col("o_month") === "1995-03")
           .withColumn("o_totalprice", col("o_totalprice") + 1000.0),
         path, "o_month")
-      path
-    })
+    }
 
   /** q_compact: the small-file pathology and its repair, end-to-end —
     * documents staged SHATTERED (64 files for a few hundred rows, the
@@ -386,15 +391,12 @@ object Sinks {
         md5(encode(col("text"), "UTF-8")).as("digest"))
 
   private[graft] def stagedCompactedDocuments(spark: SparkSession, dir: String): String =
-    partCache.getOrElseUpdate(("compact", dir, graft.Fs.tableFingerprint(dir, "documents")), {
-      val root = new java.io.File(graft.Engine.workDir("graft-compact-"), "documents_c")
-      val path = root.getAbsolutePath
+    stagedLayout(Compacted, dir, "documents_c") { path =>
       graft.sources.Tables(spark, dir, "documents")
         .repartition(64) // deliberately shattered: the "before" layout
         .write.mode("overwrite").parquet(path)
       compact(spark, path)
-      path
-    })
+    }
 
   private def walkBytes(f: java.io.File): Long =
     if (f.isDirectory)

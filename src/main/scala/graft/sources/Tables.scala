@@ -33,7 +33,9 @@ object Tables {
   // (fingerprint, schema), which reference no session, so a stopped
   // session's entry really is GC-able (caching the DataFrame itself
   // would strongly reference the key through Dataset.sparkSession and
-  // pin the entry forever).
+  // pin the entry forever). This is why the pins stay out of
+  // `operators.Artifacts`: that registry is process-wide, while a pin
+  // belongs to one session and must die with it.
   private val catalog = new java.util.WeakHashMap[
     SparkSession,
     scala.collection.concurrent.TrieMap[(String, String),

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.Tables
+import graft.operators.Artifacts
+import graft.operators.Artifacts.{Input, Kind}
 
 /** Structured Streaming surface (SURVEY §2 B23–B25): tumbling, sliding
   * and session windows, watermarks, and stateful dedup over the `events`
@@ -66,8 +68,7 @@ object Streams {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
 
-  private val stagingCache =
-    new scala.collection.concurrent.TrieMap[(String, Boolean, String), File]()
+  private[graft] val EventFeed = Kind("stream", Input, "events")
 
   /** Stage the events table as a time-ordered file feed:
     * `NumChunks` parquet files split on the event-time midpoint, then
@@ -76,17 +77,15 @@ object Streams {
     * then the sentinel file. File mtimes are set strictly increasing —
     * FileStreamSource processes files in mtime order, so arrival order
     * is event-time order and nothing real is late. Memoized per
-    * (dir, dupes, data fingerprint); cleaned up by a shutdown hook. */
+    * (dir, dupes, data fingerprint). */
   private def staged(spark: SparkSession, dir: String, withDupes: Boolean): File =
-    stagingCache.getOrElseUpdate((dir, withDupes, graft.Fs.tableFingerprint(dir, "events")), {
+    new File(Artifacts.staged(EventFeed, dir, withDupes) { root =>
       val ev = events(spark, dir)
       val mm = ev.agg(min("ts").as("lo"), max("ts").as("hi")).head()
       val (loMs, hiMs) =
         if (mm.isNullAt(0)) (0L, 0L)
         else (mm.getTimestamp(0).getTime, mm.getTimestamp(1).getTime)
       val midMs = loMs + (hiMs - loMs) / 2
-      val root = Files.createTempDirectory("graft-stream-").toFile
-      Runtime.getRuntime.addShutdownHook(new Thread(() => graft.Fs.rmRf(root)))
       val base = System.currentTimeMillis()
       var seq = 0
       def writeOne(df: DataFrame): Unit = {
@@ -113,8 +112,7 @@ object Streams {
       // outer join's ±10 min window cannot pair the two sentinels.
       writeOne(Seq(Ev(-1L, new java.sql.Timestamp(hiMs + 60 * 60 * 1000L),
         -1L, Sentinel, 0.0)).toDS().toDF())
-      root
-    })
+    }._1)
 
   /** Run `build` as a streaming query over the staged file feed, through
     * a CHECKPOINTED PARQUET FILE SINK (the production shape: exactly-once
@@ -791,15 +789,14 @@ object Streams {
     stage.listFiles().foreach(_.delete()); stage.delete()
   }
 
-  private val docFeedCache =
-    new scala.collection.concurrent.TrieMap[(String, String), File]()
+  private[graft] val DocFeed = Kind("docfeed", Input, "documents")
 
   /** Stage the documents table as an id-ordered file feed of
     * [[NumChunks]] + 2 parquet files (mtime-ordered, one micro-batch
     * each) — an arriving-crawl shape; no sentinel needed (the fold is
     * not watermark-gated; processAllAvailable drains the feed). */
   private def stagedDocFeed(spark: SparkSession, dir: String): File =
-    docFeedCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "documents")), {
+    new File(Artifacts.staged(DocFeed, dir) { root =>
       val docs = Tables(spark, dir, "documents")
       val chunks = NumChunks + 2
       // Chunk boundaries are id QUANTILES, not count-derived id
@@ -819,8 +816,6 @@ object Streams {
       val bounds =
         if (quantiles.length == chunks - 1) quantiles.map(_.toLong)
         else Array.fill(chunks - 1)(Long.MaxValue)
-      val root = Files.createTempDirectory("graft-docfeed-").toFile
-      Runtime.getRuntime.addShutdownHook(new Thread(() => graft.Fs.rmRf(root)))
       val base = System.currentTimeMillis()
       (0 until chunks).foreach { i =>
         val aboveLo =
@@ -830,8 +825,7 @@ object Streams {
         writeFeedChunk(docs.where(aboveLo && atOrBelowHi),
           root, f"doc-$i%03d", base + i * 10000L)
       }
-      root
-    })
+    }._1)
 
   /** q_stream_neardup: ONLINE near-duplicate detection over the
     * arriving crawl — each micro-batch of documents is checked against
@@ -924,7 +918,10 @@ object Streams {
     * at-least-once contract), then repairs the accumulator. At 100 TB
     * the same structure holds with the frames swapped for cached FILE
     * LISTINGS (the data wouldn't fit block storage, but the metadata
-    * — the actual per-batch fixed cost at scale — still would). */
+    * — the actual per-batch fixed cost at scale — still would).
+    * Not an [[Artifacts]] entry: it is one stream's running state,
+    * replaced every batch and keyed by the stream's state root, not a
+    * corpus-versioned artifact. */
   private case class NearDupAcc(upTo: Long, bands: DataFrame, shingles: DataFrame)
   private val nearDupAcc =
     new scala.collection.concurrent.TrieMap[String, NearDupAcc]()
@@ -943,16 +940,8 @@ object Streams {
     val resDir = new File(stateRoot, "res")
     // the batch feeds signatures, shingles, and the result join —
     // pin it once instead of re-reading the feed file per consumer
-    val trace = sys.env.contains("SPARK_GRAFT_TRACE")
-    var t0 = System.nanoTime()
-    def tr(label: String): Unit = if (trace) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[neardup-trace] batch=$batchId $label ${(t1 - t0) / 1e9}%.2f s")
-      t0 = t1
-    }
     val b = b0.localCheckpoint()
     val nBatch = b.count()
-    tr("pin+count")
     // ONE shingle pass per batch, pinned at DOC grain (round 13): the
     // array form feeds the compiled signature kernel directly (one
     // MinHashBandHashes expression — no 128-column aggregate to replan
@@ -966,18 +955,6 @@ object Streams {
     // array_intersect verify; nothing ever explodes to shingle rows
     val batchArr = Dedup.shingleArrays(b).localCheckpoint()
     val batchBands = Dedup.sigBandsFromArrays(batchArr).localCheckpoint()
-    tr("shingle+sig")
-    // the batch's OWN index dirs can be written concurrently with the
-    // probe/verify: every pre-batchId reader (the accumulator, and the
-    // strictly-below listing on the replay path) excludes batch-N dirs
-    // by construction, so the overlap is invisible to correctness
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val bandsDst = new File(bandsDir, s"batch-$batchId").getAbsolutePath
-    val shDst = new File(shDir, s"batch-$batchId").getAbsolutePath
-    val idxWrites = Seq(
-      Future(batchBands.write.mode("overwrite").parquet(bandsDst)),
-      Future(batchArr.write.mode("overwrite").parquet(shDst)))
     // prior index: the warm accumulator when it matches this batch id
     // exactly; the persisted batch-* dirs otherwise (first batch of a
     // restarted/replayed stream — disk is the truth, strictly below
@@ -992,27 +969,38 @@ object Streams {
           if (pb.isEmpty) None
           else Some((spark.read.parquet(pb: _*), spark.read.parquet(ps: _*)))
       }
-    // candidates: against the persisted index (cross) + within-batch
-    // (self) — disjoint pair spaces, no dedupe needed
-    val cands =
-      prior.map { case (pBands, _) =>
-        Dedup.crossCandidates(pBands, batchBands, nBatch * Dedup.Bands)
-      }.getOrElse(spark.emptyDataset[(Long, Long)](
-        org.apache.spark.sql.Encoders.product[(Long, Long)])
-        .toDF("da", "db"))
-      .unionAll(Dedup.lshCandidates(batchBands))
-    val allArr = prior.map(_._2.unionByName(batchArr)).getOrElse(batchArr)
-    val pairs = Dedup.verifyCandidatesArrays(allArr, cands, 0.8)
-    val dup = pairs.groupBy(col("db").as("doc_id"))
-      .agg(min(col("da")).as("dup_of"))
-    b.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_of"),
-        col("dup_of").isNull.as("keep"))
-      .write.mode("overwrite")
-      .parquet(new File(resDir, s"batch-$batchId").getAbsolutePath)
-    tr("verify+result")
-    idxWrites.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-    tr("idx-writes-join")
+    // the batch's OWN index dirs can be written concurrently with the
+    // probe/verify: every pre-batchId reader (the accumulator, and the
+    // strictly-below listing on the replay path) excludes batch-N dirs
+    // by construction, so the overlap is invisible to correctness. The
+    // pool is drained before this batch returns or fails, so no write
+    // can still land in a batch-N dir that a replay then overwrites.
+    val idxWrites = new graft.operators.Staging.JobPool(2)
+    try {
+      idxWrites.submit(batchBands.write.mode("overwrite")
+        .parquet(new File(bandsDir, s"batch-$batchId").getAbsolutePath))
+      idxWrites.submit(batchArr.write.mode("overwrite")
+        .parquet(new File(shDir, s"batch-$batchId").getAbsolutePath))
+      // candidates: against the persisted index (cross) + within-batch
+      // (self) — disjoint pair spaces, no dedupe needed
+      val cands =
+        prior.map { case (pBands, _) =>
+          Dedup.crossCandidates(pBands, batchBands, nBatch * Dedup.Bands)
+        }.getOrElse(spark.emptyDataset[(Long, Long)](
+          org.apache.spark.sql.Encoders.product[(Long, Long)])
+          .toDF("da", "db"))
+        .unionAll(Dedup.lshCandidates(batchBands))
+      val allArr = prior.map(_._2.unionByName(batchArr)).getOrElse(batchArr)
+      val pairs = Dedup.verifyCandidatesArrays(allArr, cands, 0.8)
+      val dup = pairs.groupBy(col("db").as("doc_id"))
+        .agg(min(col("da")).as("dup_of"))
+      b.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("dup_of"),
+          col("dup_of").isNull.as("keep"))
+        .write.mode("overwrite")
+        .parquet(new File(resDir, s"batch-$batchId").getAbsolutePath)
+      idxWrites.await()
+    } finally idxWrites.drainQuiet()
     // accumulator = prior ∪ this batch, now valid for batch id + 1
     // (shingle state accumulates at DOC grain — array frames)
     val nb = prior.map(_._1.unionAll(batchBands)).getOrElse(batchBands)

@@ -59,9 +59,14 @@ class FileFormatsSpec extends SparkSuiteBase {
     assert(fromXml.values.map(_._1).sum === Tables(spark, sf, "supplier").count())
   }
 
+  /** The staged directories a frame reads (its input files' parents). */
+  private def stagedDirs(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.inputFiles.map(f => new java.io.File(new java.net.URI(f)).getParent).toSet
+
   test("orc round trip: brand rollup equals parquet; ORC scan keeps pushdown") {
     import org.apache.spark.sql.functions._
-    val got = FileFormats.orcGroupSum(spark, sf).collect()
+    val orc = FileFormats.orcGroupSum(spark, sf)
+    val got = orc.collect()
       .map(r => r.getString(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
     val want = graft.sources.Tables(spark, sf, "part")
       .groupBy("p_brand")
@@ -69,9 +74,7 @@ class FileFormatsSpec extends SparkSuiteBase {
       .map(r => r.getString(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
     assert(got === want && got.nonEmpty)
     // columnar: a filtered read over the staged ORC pushes the predicate
-    val orcDir = FileFormats.stageCache.collectFirst {
-      case ((_, _, "orc"), d) => d
-    }.get
+    val orcDir = stagedDirs(orc).head
     val plan = spark.read.orc(orcDir).where(col("p_partkey") === 1L)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("p_partkey"),
@@ -90,27 +93,22 @@ class FileFormatsSpec extends SparkSuiteBase {
   }
 
   test("staged files are uncompressed (splittable) and memoized per fingerprint") {
-    // force all three stagings, then inspect the staged directories
-    FileFormats.textWordCount(spark, sf).collect()
-    FileFormats.csvGroupSum(spark, sf).collect()
-    FileFormats.jsonGroupSum(spark, sf).collect()
-    // row-format stagings only: the schema-evolution staging ("evolve")
-    // shares this cache but is parquet (splittable WITH compression), and
-    // the binaryFile staging ("bin") is one whole file per doc (not a
-    // Spark-writer part-file layout), so neither rule applies to them
-    def rowFmtDirs = FileFormats.stageCache.collect {
-      case ((_, _, fmt), d) if fmt != "evolve" && fmt != "bin" => d
-    }.toSet
+    // the three row-format stagings, found through the frames that read
+    // them: the schema-evolution staging is parquet (splittable WITH
+    // compression) and the binaryFile staging is one whole file per doc
+    // (not a Spark-writer part-file layout), so neither rule applies
+    def rowFmtDirs = Seq(FileFormats.textWordCount(spark, sf),
+      FileFormats.csvGroupSum(spark, sf), FileFormats.jsonGroupSum(spark, sf))
+      .flatMap(stagedDirs).toSet
     val dirs = rowFmtDirs
-    assert(dirs.nonEmpty)
+    assert(dirs.size === 3, s"one staged dir per row format: $dirs")
     dirs.foreach { d =>
       val files = new java.io.File(d).listFiles().filter(_.getName.startsWith("part-"))
       assert(files.nonEmpty, s"no part files in $d")
       files.foreach(f => assert(!f.getName.endsWith(".gz") && !f.getName.endsWith(".zst"),
         s"compressed (unsplittable) staged file: ${f.getName}"))
     }
-    // memoization: a second call must not re-stage (same resolved path)
-    FileFormats.textWordCount(spark, sf).collect()
+    // memoization: a second call must not re-stage (same resolved paths)
     assert(rowFmtDirs === dirs)
   }
 }
